@@ -191,13 +191,13 @@ def main(argv=None) -> int:
         while i < wl.warmup_ops + MAX_OPS:
             t0 = time.perf_counter()
             a = _attempt(wl, i, failures)
-            took = a.op_s + a.followup_s if a is not None else time.perf_counter() - t0
+            took = a.busy_s if a is not None else time.perf_counter() - t0
             if a is not None:
                 attempts.append(a)
             measured += took
             i += 1
-            # stop once another op as long as this one would overrun --seconds
-            if args.trace or measured + took > args.seconds:
+            # stop once the measured time reaches --seconds
+            if args.trace or measured >= args.seconds:
                 break
         n_attempted = i - wl.warmup_ops
         failed = len(failures) + sum(1 for a in attempts if not a.ok)
@@ -237,7 +237,7 @@ def main(argv=None) -> int:
             "workload": args.workload, "seed": args.seed, "trace": args.trace,
             **session_facts, "session_s": session_s, "setup_reps_s": setup_reps,
             "warmup_op_s": warmups, "op_s": op_times,
-            "followup_s": [a.followup_s for a in ok_attempts],
+            "followup_s": [a.followup_reps or a.followup_s for a in ok_attempts],
             "drift_s_per_op": _slope(op_times), "weight_mismatches": score.mismatched,
         }
         correct = failed == 0 and score.precision == 1.0 and score.recall == 1.0

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import statistics
 import time
 from dataclasses import dataclass
 
@@ -40,9 +41,15 @@ from oracles import Score
 @dataclass
 class Attempt:
     op_s: float
-    followup_s: float
+    followup_s: float  # the timed median, when an op repeats its follow-up
     items: int
     ok: bool = True
+    followup_reps: tuple = ()  # every repetition, untimed ones first
+
+    @property
+    def busy_s(self) -> float:
+        """Wall time of the op and of every follow-up it ran."""
+        return self.op_s + (sum(self.followup_reps) or self.followup_s)
 
 
 @dataclass
@@ -87,6 +94,12 @@ class Backfill:
     # A batch build runs once per process, so its users pay the first op's
     # JIT and codegen on every run: the timed op is the process's first.
     warmup_ops = 0
+    # One resume per run spread 16-29% of its median between runs, and
+    # resumes in one process kept getting faster over the first few (4.6 s
+    # to 3.4 s over six on a 4-core host). Each op resumes `resume_warmups` times
+    # untimed, then `resumes` times timed, and reports their median.
+    resume_warmups = 2
+    resumes = 3
 
     def __init__(self, ctx: Context, score: Score, extractor) -> None:
         self.ctx, self.score, self.extractor = ctx, score, extractor
@@ -109,16 +122,23 @@ class Backfill:
             out = pipe.run(spark.read.parquet(corpus), checkpoint_dir=ck)
             pipe.export_reference_layout(out["triples"], out_dir)
             t1 = time.perf_counter()
-            again = pipe.run(spark.read.parquet(corpus), checkpoint_dir=ck)
-            pipe.export_reference_layout(again["triples"], out_dir + "r")
-            t2 = time.perf_counter()
+            resumed, reps = [], []
+            for k in range(self.resume_warmups + self.resumes):
+                r0 = time.perf_counter()
+                again = pipe.run(spark.read.parquet(corpus), checkpoint_dir=ck)
+                pipe.export_reference_layout(again["triples"], f"{out_dir}r{k}")
+                reps.append(time.perf_counter() - r0)
+                resumed.append(again["triples"])
+            resume_s = statistics.median(reps[self.resume_warmups:])
             if warmup:
-                return Attempt(t1 - t0, t2 - t1, 0)
+                return Attempt(t1 - t0, resume_s, 0, followup_reps=tuple(reps))
             ok = self.score.add(oracles.spark_triples(out["triples"].collect()), self.want)
-            ok &= self.score.add(oracles.spark_triples(again["triples"].collect()), self.want)
-            return Attempt(t1 - t0, t2 - t1, self.n_turns, ok)
+            for triples in resumed:
+                ok &= self.score.add(oracles.spark_triples(triples.collect()), self.want)
+            return Attempt(t1 - t0, resume_s, self.n_turns, ok, followup_reps=tuple(reps))
         finally:
-            for d in (ck, out_dir, out_dir + "r"):
+            n = self.resume_warmups + self.resumes
+            for d in [ck, out_dir] + [f"{out_dir}r{k}" for k in range(n)]:
                 shutil.rmtree(d, ignore_errors=True)
 
     def traced(self, tr) -> float:
@@ -231,7 +251,10 @@ class NearDedup:
     name = "near_dedup"
     n_docs = 1000
     n_warmup_docs = 200
-    warmup_ops = 3  # op time keeps falling over the first three ops
+    # op time falls steeply over the first two ops (about 9 s, then 4-5 s)
+    # and by a few percent per op after that; the median of the timed ops
+    # absorbs the rest
+    warmup_ops = 2
 
     def __init__(self, ctx: Context, score: Score, extractor=None) -> None:
         self.ctx, self.score = ctx, score
