@@ -11,10 +11,23 @@ On a cluster with Iceberg jars these become Iceberg tables (atomic commits,
 snapshot lineage) — `use_iceberg` switches the writer; the sandbox image has
 no Iceberg runtime, so parquet + atomic manifest rename is the fallback and
 is what the tests exercise.
+
+A partitioned stage write is rebalanced by its partition columns first
+(the REBALANCE hint): AQE merges small shuffle partitions until each key's
+rows sit in about one task, and splits a skewed key into advisory-size
+pieces. Without it every writing task emits one file per key it holds, so
+a stage of T tasks x K keys fans out into up to T*K tiny files that every
+later read lists and opens.
+
+Several stores may share one root (e.g. the gazetteer canon cache used by
+concurrent processes): each write re-reads the manifest and merges its own
+entry under an exclusive file lock, so a writer never drops an entry that
+another store committed after this one was constructed.
 """
 
 from __future__ import annotations
 
+import fcntl
 import json
 import os
 import time
@@ -62,15 +75,22 @@ class CheckpointStore:
         (e.g. the minhash banding of a signature index) — recorded in the
         manifest entry so readers can validate compatibility instead of
         silently consuming an index built under different parameters."""
-        w = df.write.mode("overwrite")
+        w = df.write
         if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(self._stage_path(stage))
-        self.manifest[stage] = {"completed_at": time.time(), **(meta or {})}
-        tmp = self._manifest_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(self.manifest, f, indent=2)
-        os.replace(tmp, self._manifest_path())  # atomic manifest commit
+            w = df.hint("rebalance", *partition_by).write.partitionBy(*partition_by)
+        w.mode("overwrite").parquet(self._stage_path(stage))
+        entry = {"completed_at": time.time(), **(meta or {})}
+        mf = self._manifest_path()
+        with open(mf + ".lock", "w") as lock:
+            fcntl.flock(lock, fcntl.LOCK_EX)
+            if os.path.exists(mf):
+                with open(mf) as f:
+                    self.manifest = json.load(f)
+            self.manifest[stage] = entry
+            tmp = mf + ".tmp"
+            with open(tmp, "w") as f:
+                json.dump(self.manifest, f, indent=2)
+            os.replace(tmp, mf)  # atomic manifest commit
 
     def run_stage(
         self,

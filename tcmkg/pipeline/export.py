@@ -16,14 +16,13 @@ This module reproduces that directory as ONE partitioned write per side:
 
 Scale notes (100 TB): the relation side is a single pass over the triples
 frame — a derived file-name column + ``write.partitionBy`` routes rows to
-their directory with no shuffle (each task appends to the partitions it
-sees). The dose-bearing contains file is split out as a second single-pass
-write because its schema has one extra column (the reference's
-prescription2medicinal_material.csv carries ``dose``). Pass
-``files_per_relation`` to repartition by (rel_file, bucket) first when the
-task count × relation count would otherwise produce too many small files —
-that one optional shuffle moves O(edges), still tiny next to the corpus
-that produced them.
+their directory. Every write is first rebalanced by its file column (the
+REBALANCE hint, one shuffle of O(edges), tiny next to the corpus that
+produced them): AQE packs small relations together so each directory gets
+about one file, and splits a huge relation into advisory-size files. The
+dose-bearing contains file is split out as a second single-pass write
+because its schema has one extra column (the reference's
+prescription2medicinal_material.csv carries ``dose``).
 """
 
 from __future__ import annotations
@@ -131,12 +130,11 @@ def export_reference_layout(
     out_dir: str,
     symptom_locus: DataFrame | None = None,
     fmt: str = "csv",
-    files_per_relation: int | None = None,
 ) -> dict[str, str]:
     """Write the reference's output directory from the node and triple
     frames. -> {"entity": path, "relation": path}.
 
-    Three single-pass jobs: entities (partitioned by family file), plain
+    Three partitioned writes: entities (partitioned by family file), plain
     relations (partitioned by file stem, ``source_id,target_id,
     Relation_type``), and the dose-bearing contains file (its reference
     schema adds ``dose``)."""
@@ -153,7 +151,7 @@ def export_reference_layout(
         "extdb_id",
         ent_map[F.col("entity_type")].alias("ent_file"),
     )
-    _write(ents, ent_path, "ent_file", fmt, files_per_relation)
+    _write(ents, ent_path, "ent_file", fmt)
 
     stem_map = F.create_map(
         *[F.lit(x) for k, v in RELATION_FILE_OF_PRED.items() for x in (k, v)]
@@ -178,7 +176,7 @@ def export_reference_layout(
                 F.lit(LOCUS_FILE).alias("rel_file"),
             )
         )
-    _write(plain, rel_path, "rel_file", fmt, files_per_relation)
+    _write(plain, rel_path, "rel_file", fmt)
 
     dosed = rel.filter(F.col("rel_file") == DOSE_PRED_FILE).select(
         "source_id",
@@ -187,31 +185,15 @@ def export_reference_layout(
         "Relation_type",
         "rel_file",
     )
-    _write(dosed, rel_path, "rel_file", fmt, files_per_relation, mode="append")
+    _write(dosed, rel_path, "rel_file", fmt, mode="append")
 
     return {"entity": ent_path, "relation": rel_path}
 
 
 def _write(
-    df: DataFrame,
-    path: str,
-    part_col: str,
-    fmt: str,
-    files_per_relation: int | None,
-    mode: str = "overwrite",
+    df: DataFrame, path: str, part_col: str, fmt: str, mode: str = "overwrite"
 ) -> None:
-    if files_per_relation:
-        # repartition on (file, deterministic row-hash salt): each file
-        # lands in AT MOST files_per_relation partitions, and a huge
-        # relation still splits across that many tasks. Hashing the file
-        # column alone would pin every relation to one task — the thing
-        # that cannot hold at 100 TB.
-        salt = F.pmod(
-            F.hash(*[F.col(c) for c in df.columns if c != part_col]),
-            F.lit(files_per_relation),
-        )
-        df = df.repartition(F.col(part_col), salt)
-    w = df.write.partitionBy(part_col).mode(mode)
+    w = df.hint("rebalance", part_col).write.partitionBy(part_col).mode(mode)
     if fmt == "csv":
         w.option("header", True).csv(path)
     else:

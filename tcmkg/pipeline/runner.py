@@ -16,16 +16,29 @@ the last complete stage with identical results (determinism test).
 from __future__ import annotations
 
 import hashlib
+import inspect
 import os
+import sys
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..fixtures import dimensions as _dimensions
+from ..fixtures import locus as _locus_vocab
 from ..fixtures.gazetteers import CANON_PREFIX, Gazetteers, build_gazetteers, records_to_rows
+from ..functions import merge as _merge
+from ..functions.merge import fold_multivalue
+from ..kernels import normalize as _normalize
+from . import canonicalize as _canonicalize
+from . import cc as _cc
+from . import locus as _locus
+from . import util as _util
 from .canonicalize import canonicalize, normalize_alias_map
 from .checkpoints import CheckpointStore
 from .extract import extract_mentions, ingest, resolve_anchors, rule_prefilter
+from .locus import symptom_locus_edges
 from .triples import assemble_triples
 
 _GAZ_SCHEMA = T.StructType(
@@ -45,26 +58,23 @@ _DEFAULT_CANON_DIR = os.path.join(
     "data", "gazetteer_canon",
 )
 
+# every module whose source the canon-cache tables depend on: CC and
+# ranking, the fold semantics (functions/merge), the fixed dimension and
+# locus vocabularies plus the containment join (nodes_all, symptom_locus),
+# and THIS module (the node-folding aggregation lives here)
+FINGERPRINT_MODULES = (
+    _canonicalize, _cc, _util, _normalize, _merge,
+    _dimensions, _locus_vocab, _locus,
+    sys.modules[__name__],
+)
+
 
 def _gaz_fingerprint(gaz: Gazetteers) -> str:
     """Content+code key for the canonicalization cache: the gazetteer rows
-    plus the source of every module the cached tables depend on — including
-    the fold semantics (functions/merge) and THIS module (the node-folding
-    aggregation lives here), so no edit to the producing code can serve
-    stale stage tables."""
-    import inspect
-    import sys
-
-    from ..functions import merge as _mod_merge
-    from ..kernels import normalize as _mod_norm
-    from . import canonicalize as _mod_canon
-    from . import cc as _mod_cc
-    from . import util as _mod_util
-
+    plus the source of every FINGERPRINT_MODULES entry, so no edit to the
+    producing code can serve stale stage tables."""
     h = hashlib.md5()
-    mods = (_mod_canon, _mod_cc, _mod_util, _mod_norm, _mod_merge,
-            sys.modules[__name__])
-    for mod in mods:
+    for mod in FINGERPRINT_MODULES:
         h.update(inspect.getsource(mod).encode())
     for etype, records in sorted(gaz.tables().items()):
         h.update(etype.encode())
@@ -73,14 +83,77 @@ def _gaz_fingerprint(gaz: Gazetteers) -> str:
     return h.hexdigest()[:16]
 
 
+def _canon_frames(spark: SparkSession, etype: str, records):
+    """-> (alias2canon thunk, folded node-table thunk) for one entity type;
+    both share one canonicalization, computed at most once."""
+    rec_df = spark.createDataFrame(records_to_rows(records), schema=_GAZ_SCHEMA)
+    canon_cache: dict[str, DataFrame] = {}
+
+    def _canon() -> dict[str, DataFrame]:
+        if not canon_cache:
+            rec2canon, alias2canon = canonicalize(rec_df, CANON_PREFIX[etype])
+            canon_cache.update(rec2canon=rec2canon, alias2canon=alias2canon)
+        return canon_cache
+
+    def _nodes_df() -> DataFrame:
+        # fold merged records into one canonical row with the reference's
+        # merge_two_value semantics (set-union of `;`-tokens per column —
+        # merge_utility.py:120-156) via the A1/A2 aggregation builders
+        return (
+            rec_df.join(_canon()["rec2canon"], "record_id")
+            .groupBy("canonical_id")
+            .agg(
+                fold_multivalue("names"),
+                fold_multivalue("symmap_id"),
+                fold_multivalue("extdb_id"),
+                F.array_sort(F.collect_set("record_id")).alias("source_records"),
+            )
+            .withColumn("names", F.split("names", ";"))
+            .withColumn("entity_type", F.lit(etype))
+        )
+
+    return (lambda: _canon()["alias2canon"]), _nodes_df
+
+
+def _union_nodes(spark: SparkSession, per_type: list[DataFrame]) -> DataFrame:
+    """The full node table: the folded per-type tables plus the dimension
+    entities (property/flavour/tropism/toxicity) and locus entities — for
+    those the fixed vocabulary IS the entity table (reference
+    extract_herb.py:466-585 + merge_tcm_symptom.py:92-98 write them as
+    static entity CSVs), constants with no CC needed."""
+    dims = spark.createDataFrame(
+        _dimensions.dim_node_rows() + _locus_vocab.locus_node_rows(),
+        schema=(
+            "canonical_id string, entity_type string, names array<string>, "
+            "symmap_id string, extdb_id string, source_records array<string>"
+        ),
+    )
+    out = per_type[0]
+    for n in per_type[1:] + [dims]:
+        out = out.unionByName(n)
+    return out.select(
+        "canonical_id",
+        "entity_type",
+        "names",
+        F.nullif("symmap_id", F.lit("")).alias("symmap_id"),
+        F.nullif("extdb_id", F.lit("")).alias("extdb_id"),
+        "source_records",
+    )
+
+
 class KGPipeline:
     """Holds canonicalized gazetteers; `run` builds triples for a corpus.
 
     Gazetteer canonicalization (9 entity types x CC + ranking) is the only
-    expensive fixed cost per fresh session; with `canon_dir` (default: the
-    repo data dir) the per-type alias map and folded node table persist as
-    CheckpointStore stage tables and later sessions resume by reading them.
-    Pass canon_dir=None to force recomputation.
+    expensive fixed cost per fresh session. With `canon_dir` (default: the
+    repo data dir) every corpus-independent table persists as a
+    CheckpointStore stage keyed by the gazetteer+code fingerprint:
+    `alias_<type>` (alias map per entity type), `nodes_<type>` (folded
+    per-type nodes, only an input of the next stage), `nodes_all` (the
+    full node table, dimension and locus entities included) and
+    `symptom_locus` (the symptom→locus edges). A warm session reads the
+    alias maps and the two full tables and nothing else. Pass
+    canon_dir=None to recompute lazily in memory.
     """
 
     _instances = 0
@@ -99,91 +172,42 @@ class KGPipeline:
         if canon_dir is not None:
             store = CheckpointStore(os.path.join(canon_dir, _gaz_fingerprint(gaz)))
         self.maps: dict[str, dict[str, str]] = {}
-        self.nodes: list[DataFrame] = []
-        from ..functions.merge import fold_multivalue
-
+        per_type = []
         for etype, records in gaz.tables().items():
-            rec_df = spark.createDataFrame(records_to_rows(records), schema=_GAZ_SCHEMA)
-            canon_cache: dict[str, DataFrame] = {}
-
-            def _canon() -> DataFrame:
-                """rec2canon, computed at most once per etype."""
-                if "rec2canon" not in canon_cache:
-                    rec2canon, alias2canon = canonicalize(rec_df, CANON_PREFIX[etype])
-                    canon_cache["rec2canon"] = rec2canon
-                    canon_cache["alias2canon"] = alias2canon
-                return canon_cache["rec2canon"]
-
-            def _alias_df() -> DataFrame:
-                _canon()
-                return canon_cache["alias2canon"]
-
-            def _nodes_df() -> DataFrame:
-                # fold merged records into one canonical row with the
-                # reference's merge_two_value semantics (set-union of
-                # `;`-tokens per column — merge_utility.py:120-156) via the
-                # A1/A2 aggregation builders
-                return (
-                    rec_df.join(_canon(), "record_id")
-                    .groupBy("canonical_id")
-                    .agg(
-                        fold_multivalue("names"),
-                        fold_multivalue("symmap_id"),
-                        fold_multivalue("extdb_id"),
-                        F.array_sort(F.collect_set("record_id")).alias("source_records"),
-                    )
-                    .withColumn("names", F.split("names", ";"))
-                    .withColumn("entity_type", F.lit(etype))
-                )
-
-            if store is not None:
-                alias2canon = store.run_stage(spark, f"alias_{etype}", _alias_df)
-                nodes_df = store.run_stage(spark, f"nodes_{etype}", _nodes_df)
+            alias_df, nodes_df = _canon_frames(spark, etype, records)
+            if store is None:
+                alias2canon = alias_df()
+                per_type.append(nodes_df)
             else:
-                alias2canon, nodes_df = _alias_df(), _nodes_df()
+                alias2canon = store.run_stage(spark, f"alias_{etype}", alias_df)
+                per_type.append(partial(store.run_stage, spark, f"nodes_{etype}", nodes_df))
             rows = [(r["alias"], r["canonical_id"]) for r in alias2canon.collect()]
             self.maps[etype] = normalize_alias_map(rows)
-            self.nodes.append(nodes_df)
         self.formula_alias = spark.createDataFrame(
             list(self.maps["formula"].items()), schema="alias string, canonical_id string"
         )
 
+        def _nodes_all() -> DataFrame:
+            return _union_nodes(spark, [f() for f in per_type])
+
+        if store is None:
+            self._nodes = _nodes_all()
+            self._symptom_locus = symptom_locus_edges(self._nodes)
+        else:
+            self._nodes = store.run_stage(spark, "nodes_all", _nodes_all)
+            self._symptom_locus = store.run_stage(
+                spark, "symptom_locus", lambda: symptom_locus_edges(self._nodes)
+            )
+
     # ------------------------------------------------------------------
     def nodes_table(self) -> DataFrame:
-        from ..fixtures.dimensions import dim_node_rows
-        from ..fixtures.locus import locus_node_rows
-
-        out = self.nodes[0]
-        for n in self.nodes[1:]:
-            out = out.unionByName(n)
-        # dimension entities (property/flavour/tropism/toxicity) and locus
-        # entities: the fixed vocabulary IS the entity table (reference
-        # extract_herb.py:466-585 + merge_tcm_symptom.py:92-98 write them
-        # as static entity CSVs) — constants, no CC needed
-        dims = self.spark.createDataFrame(
-            dim_node_rows() + locus_node_rows(),
-            schema=(
-                "canonical_id string, entity_type string, names array<string>, "
-                "symmap_id string, extdb_id string, source_records array<string>"
-            ),
-        )
-        out = out.unionByName(dims)
-        return out.select(
-            "canonical_id",
-            "entity_type",
-            "names",
-            F.nullif("symmap_id", F.lit("")).alias("symmap_id"),
-            F.nullif("extdb_id", F.lit("")).alias("extdb_id"),
-            "source_records",
-        )
+        return self._nodes
 
     def symptom_locus(self) -> DataFrame:
         """Symptom→locus edges by entity-name containment (reference
         merge_tcm_symptom.py:90-131) — corpus-independent, derived from the
         canonicalized symptom entities and the fixed locus vocabulary."""
-        from .locus import symptom_locus_edges
-
-        return symptom_locus_edges(self.nodes_table())
+        return self._symptom_locus
 
     def mentions(
         self, transcripts: DataFrame, kernel_partitions: int | None = None
@@ -203,7 +227,8 @@ class KGPipeline:
         # added a block-manager write+read of ~700k rows and one extra
         # action (measured ~0.5s/leg at sf0.1, interleaved mins). The
         # checkpointed path (run()) still materializes mentions to parquet
-        # because THERE the stage is a resume point.
+        # because THERE the stage is a resume point — unpartitioned, since
+        # every reader scans all kinds (see run()).
         return assemble_triples(self.mentions(transcripts))
 
     def export_reference_layout(
@@ -211,7 +236,6 @@ class KGPipeline:
         triples: DataFrame,
         out_dir: str,
         fmt: str = "csv",
-        files_per_relation: int | None = None,
     ) -> dict[str, str]:
         """Write the reference's output directory (entity/<type> +
         relation/<name>, reference file stems and Relation_type labels)
@@ -225,7 +249,6 @@ class KGPipeline:
             out_dir,
             symptom_locus=self.symptom_locus(),
             fmt=fmt,
-            files_per_relation=files_per_relation,
         )
 
     # ------------------------------------------------------------------
@@ -241,10 +264,14 @@ class KGPipeline:
 
         store = CheckpointStore(checkpoint_dir)
         spark = self.spark
+        # s1 is not partitioned by kind: reduce_mentions and _metrics read
+        # every kind in one scan, so a per-kind layout would only add a
+        # partition-discovery job to each read and one file per
+        # (task, kind) to the write. Stages written partitioned by kind
+        # still resume (partition discovery restores the column).
         mentions = store.run_stage(
             spark, "s1_mentions",
             lambda: self.mentions(transcripts),
-            partition_by=["kind"],
             # schema-evolution guard: a pre-amt_min/amt_max checkpoint must
             # recompute, not resume (metrics reference the new columns)
             expect_cols=["amt_min", "amt_max"],

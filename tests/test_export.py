@@ -119,31 +119,27 @@ def test_entity_files_cover_all_20_families(spark, exported):
     assert got_ids == want_ids
 
 
-def test_files_per_relation_bounds_small_files(spark, exported):
-    """files_per_relation must bound the file count per relation dir while
-    leaving the exported row set identical."""
-    from tcmkg.pipeline.export import export_reference_layout, read_relation
-    from tcmkg.fixtures.gazetteers import build_gazetteers
-    from tcmkg.pipeline.runner import KGPipeline
+def test_export_bounds_small_files(spark, pipeline, exported):
+    """The writer clusters rows by file: triples scattered over 16
+    partitions still export 1-2 data files per directory, with the row
+    set identical to the reference export."""
+    from tcmkg.pipeline.export import read_relation
 
     triples, _ = exported
-    out2 = OUT + "_fpr"
+    out2 = OUT + "_scattered"
     shutil.rmtree(out2, ignore_errors=True)
     try:
-        p = KGPipeline(spark, build_gazetteers())
-        export_reference_layout(
-            p.nodes_table(), triples, out2,
-            symptom_locus=p.symptom_locus(), files_per_relation=2,
-        )
-        rel_root = os.path.join(out2, "relation")
-        for d in os.listdir(rel_root):
-            if not d.startswith("rel_file="):
-                continue
-            parts = [
-                f for f in os.listdir(os.path.join(rel_root, d))
-                if f.endswith(".csv")
-            ]
-            assert 1 <= len(parts) <= 2, (d, parts)
+        pipeline.export_reference_layout(triples.repartition(16), out2)
+        for side in ("entity", "relation"):
+            root = os.path.join(out2, side)
+            for d in os.listdir(root):
+                if "=" not in d:
+                    continue
+                parts = [
+                    f for f in os.listdir(os.path.join(root, d))
+                    if f.endswith(".csv")
+                ]
+                assert 1 <= len(parts) <= 2, (side, d, parts)
         a = read_relation(spark, OUT).select(
             "rel_file", "source_id", "target_id"
         )

@@ -178,6 +178,7 @@ def test_gazetteer_canon_checkpoint(tmp_path, spark, gazetteers):
     store = CheckpointStore(os.path.join(d, _gaz_fingerprint(gazetteers)))
     etypes = ("herb", "formula", "symptom", "syndrome", "disease")
     assert all(store.has(f"{k}_{e}") for k in ("alias", "nodes") for e in etypes)
+    assert store.has("nodes_all") and store.has("symptom_locus")
 
     p2 = KGPipeline(spark, gazetteers, canon_dir=d)  # resumes
     assert p2.maps == p1.maps
@@ -186,6 +187,66 @@ def test_gazetteer_canon_checkpoint(tmp_path, spark, gazetteers):
     n2 = {tuple(sorted(r["names"])) + (r["canonical_id"], r["entity_type"])
           for r in p2.nodes_table().collect()}
     assert n1 == n2
+    l1 = {(r["subj"], r["obj"]) for r in p1.symptom_locus().collect()}
+    l2 = {(r["subj"], r["obj"]) for r in p2.symptom_locus().collect()}
+    assert l1 and l1 == l2
+
+
+def test_gaz_fingerprint_covers_vocabularies(monkeypatch, gazetteers):
+    """The canon cache key changes with the source of the locus and
+    dimension modules the cached node and symptom→locus tables come from."""
+    import inspect
+
+    from tcmkg.fixtures import dimensions, locus as locus_vocab
+    from tcmkg.pipeline import locus, runner
+
+    base = runner._gaz_fingerprint(gazetteers)
+    real = inspect.getsource
+    for mod in (locus, locus_vocab, dimensions):
+        assert mod in runner.FINGERPRINT_MODULES
+        monkeypatch.setattr(
+            inspect, "getsource", lambda m, mod=mod: real(m) + ("#" if m is mod else "")
+        )
+        assert runner._gaz_fingerprint(gazetteers) != base
+    monkeypatch.undo()
+    assert runner._gaz_fingerprint(gazetteers) == base
+
+
+def test_checkpoint_layout(tmp_path, spark, pipeline, transcripts_df):
+    """run() writes few files: s1_mentions is not partitioned by kind and
+    holds at most 2 x defaultParallelism data files; each s2_triples
+    predicate directory holds exactly one."""
+    import os
+
+    ckpt = str(tmp_path / "layout")
+    pipeline.run(transcripts_df, checkpoint_dir=ckpt)
+
+    def data_files(d):
+        return [f for f in os.listdir(d) if f.startswith("part-")]
+
+    s1 = os.path.join(ckpt, "s1_mentions")
+    assert not [d for d in os.listdir(s1) if d.startswith("kind=")]
+    assert 1 <= len(data_files(s1)) <= 2 * spark.sparkContext.defaultParallelism
+    s2 = os.path.join(ckpt, "s2_triples")
+    preds = [d for d in os.listdir(s2) if d.startswith("pred=")]
+    assert preds
+    for d in preds:
+        assert len(data_files(os.path.join(s2, d))) == 1, d
+
+
+def test_checkpoint_manifest_merges_stores(tmp_path, spark):
+    """Two stores on one root, both built before either writes: each
+    write merges into the on-disk manifest, so neither drops the other's
+    entry."""
+    from tcmkg.pipeline.checkpoints import CheckpointStore
+
+    root = str(tmp_path / "shared")
+    a, b = CheckpointStore(root), CheckpointStore(root)
+    a.write(spark.range(3), "from_a")
+    b.write(spark.range(4), "from_b")
+    fresh = CheckpointStore(root)
+    assert fresh.has("from_a") and fresh.has("from_b")
+    assert fresh.read(spark, "from_a").count() == 3
 
 
 def test_unlinked_diagnostics_and_soft_link(spark, pipeline, transcripts_df):
