@@ -2408,14 +2408,13 @@ def q_kg_all_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_kg_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the PUBLISHED graph (undirected): the
     same checkpointed label-propagation operator that canonicalizes
-    entities (pipeline/cc.py, SURVEY A3) applied to the KG it built —
-    (node, component), component = min node id reachable. r6: runs the
-    pair-edge CC fast path (one join + one agg per propagation round —
-    pipeline/cc.connected_components_edges) instead of the incidence
-    formulation; per-round labels and the fixpoint are identical.
-    The oracle computes min-reachable-id through a recursive transitive
-    closure over the same full-edge derivation — so the iterative Spark
-    plan is hash-checked against an independent fixpoint."""
+    entities (pipeline/cc.connected_components_edges, SURVEY A3) applied
+    to the KG it built — (node, component), component = min node id
+    reachable. Each triple is one pair edge, so no key reduction is
+    needed. The oracle computes min-reachable-id through a recursive
+    transitive closure over the same full-edge derivation — so the
+    iterative Spark plan is hash-checked against an independent
+    fixpoint."""
     from ..pipeline.cc import connected_components_edges
 
     t = _triples(spark, sf_dir)

@@ -413,7 +413,7 @@ def near_dedup(
                                    through exact_dedup (identical text →
                                    certain, jaccard≡1.0) instead of a
                                    quadratic pair join
-      5. connected_components      transitive closure over verified + exact
+      5. connected components      transitive closure over verified + exact
                                    edges; survivor = min id per component
 
     Returns {"kept", "removals", "dropped_buckets", "metrics", "unpersist"}:
@@ -554,19 +554,13 @@ def _dedup_chain(
         .unionByName(exact_edges.withColumn("_via_exact", F.lit(True)))
         .localCheckpoint()
     )
-    # Pair-edge CC fast path (r6): one join + one agg per propagation round
-    # instead of the incidence form's two joins + two aggs — see
-    # connected_components_edges (no pre-dedup needed: CC's symmetrize step
-    # dropDuplicates itself). cc_max_iter bounds propagation rounds at the
-    # component DIAMETER; the CC warns (no silent cap) if a pathological
-    # chain exceeds it — raise cc_max_iter for long templated chains.
-    # CONTRACT: pre_checkpointed=True is only valid because `edges` above
-    # is localCheckpoint'ed — if that checkpoint is ever removed or moved,
-    # drop the flag too, or CC's three-way fan-out (fwd/rev/node-set) will
-    # silently re-execute the whole verify + hot-route plan three times.
-    comp = connected_components_edges(
-        edges, max_iter=cc_max_iter, pre_checkpointed=True
-    )
+    # Pair-edge CC (one join + one agg per propagation round; no pre-dedup
+    # needed: CC's symmetrize step drops duplicates itself). `edges` is a
+    # checkpoint leaf, which CC detects and so skips re-materializing its
+    # input. cc_max_iter bounds propagation rounds at the component
+    # DIAMETER; CC warns (no silent cap) if a pathological chain exceeds
+    # it — raise cc_max_iter for long templated chains.
+    comp = connected_components_edges(edges, max_iter=cc_max_iter)
     removals = comp.filter(F.col("node") != F.col("component"))
     if new_pred is not None:
         removals = removals.filter(new_pred("node"))

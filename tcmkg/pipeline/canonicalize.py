@@ -7,7 +7,9 @@ Spark-native equivalent of the reference's union-find merge
   1. explode every record's `;`-joined keys into (record_id, (kind, key))
      incidence rows — name keys, symmap keys, external-DB keys each in their
      own namespace (a name can't merge with an ID that spells the same);
-  2. connected components by checkpointed min-label propagation (cc.py);
+  2. connected components (cc.py): each key becomes a star of pair edges
+     from its minimum member (cc.key_edges), then the one pair-edge
+     min-label propagation loop (cc.connected_components_edges) runs;
   3. component representative = min record_id ("first occurrence wins" under
      lexicographic record ids);
   4. canonical id = PREFIX + zero-padded stable rank of the representative
@@ -23,7 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..kernels.normalize import text_norm
-from .cc import connected_components
+from .cc import connected_components_edges, key_edges
 from .util import stable_rank
 
 
@@ -55,7 +57,7 @@ def canonicalize(records: DataFrame, prefix: str) -> tuple[DataFrame, DataFrame]
     correct at fact-table scale — CC and ranking never collapse to one task.
     """
     inc = gazetteer_incidence(records)
-    comp = connected_components(inc)  # (node, component)
+    comp = connected_components_edges(key_edges(inc))  # (node, component)
 
     reps = comp.select(F.col("component").alias("rep")).distinct()
     ranked = stable_rank(reps, "rep", "rank")

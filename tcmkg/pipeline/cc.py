@@ -7,101 +7,101 @@ component's minimum node id ("first occurrence wins" under lexicographic
 record ids, which our record-id scheme makes equivalent to the reference's
 row-order rule — see SURVEY.md §2.4 A3).
 
-Algorithm (bipartite min-label propagation over the node↔key incidence list):
-    label(n) := n
-    repeat:
-      kmin(k)  = min over nodes n∈k of label(n)         -- shuffle on key
-      cand(n)  = min over keys k∋n of kmin(k)           -- shuffle on node
-      label(n) = min(label(n), cand(n))
-    until no label changed
+One loop serves every caller. It takes undirected pair edges (a, b);
+canonicalization's node↔key incidence is reduced to pair edges first by
+`key_edges` (a star from each key's minimum member, which spans the same
+component and keeps the same minimum).
 
-Converges in O(component diameter) rounds for the plain loop. Pointer
-jumping (label <- label(label) per round) was measured and REJECTED: on the
-sf0.1 near-dup graph (diameter 11) it cut rounds only 12 -> 10 while adding
-a label-table self-join per round — net neutral-to-worse. The min VALUE can
-only travel one edge per propagation round (BFS), so compressing the
-pointer forest doesn't accelerate discovery. What DOES pay (r6) is
-Shiloach-Vishkin-style hooking on the pair-edge fast path
-(connected_components_edges `hook_labels`, default on): hook edges are
-rebuilt per block from the already-checkpointed labels frame, costing no
-extra action — unlike pointer jumping's per-round join — and contract the
-effective diameter geometrically (see that docstring for the numbers).
-The incidence form below keeps the plain loop: synthetic hook keys could
-collide with real hyper-keys, and its callers are contract-sized.
-Both aggregations are MIN —
-partially aggregatable, so Spark's map-side combine neutralizes hot keys
-(a key shared by millions of records contributes one row per map partition
-after partial agg). AQE skew-join handles residual join skew; lineage is
-truncated with localCheckpoint every round so iteration count doesn't blow
-up the plan.
+Algorithm (min-label propagation over the symmetrized, self-looped edges):
+    label(n) := n
+    repeat in blocks of _ROUNDS_PER_CHECK rounds:
+      label(n) = min over edges (n, m), self-loop included, of label(m)
+                                                  -- one join + one agg
+      after the block: stop if its last round changed nothing; otherwise
+      the next block propagates over base edges ∪ {n ↔ label(n)} hooks
+
+The aggregation is MIN — partially aggregatable, so Spark's map-side
+combine neutralizes hot nodes — and AQE's runtime broadcast conversion
+keeps the per-round join cheap (AQE off measured 2-4x worse). Lineage is
+truncated with localCheckpoint once per block, where the convergence
+check runs.
+
+Hooking (Shiloach-Vishkin style): a label is always a reachable node, so
+every hook edge is intra-component and the fixpoint is unchanged, while
+each block can traverse in one round the hops all previous blocks
+discovered — the effective diameter contracts geometrically. The hooks are
+rebuilt per block from the just-checkpointed labels frame against the
+unchanged base list: a narrow union, no extra action, no stale hooks.
+
+Measured alternatives (r6):
+  * hooks off — slower: 12 rounds / 1.95 s against 9 rounds / 1.74 s
+    with hooks on the diameter-12 sf0.1 near-dedup graph, and 63 rounds /
+    6.8 s against 12 rounds / 1.8 s on a diameter-60 chain.
+  * pointer jumping (label <- label(label) per round) — rejected: it cut
+    rounds 19 -> 10 on the sf1.0 near-dedup graph, but its per-round
+    self-join cost more than the rounds it saved (the min value travels
+    one edge per round however the pointer forest is compressed).
+  * growing blocks (3, 6, 12, ... rounds) — rejected: 21 rounds for a
+    diameter-12 graph, 3.10 s vs 2.19 s for fixed 3-round blocks, which
+    bound the post-fixpoint waste at 2 rounds.
 """
 
 from __future__ import annotations
 
+import warnings
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# propagation rounds per convergence check + lineage checkpoint: each
+# round's cost is scheduling latency, not data, on contract/bench-scale
+# graphs (~0.3 s per round at sf1.0 near-dedup), so a block amortizes the
+# two actions over k edge-hops. Labels decrease monotonically, so "the
+# block's last round changed nothing" IS the fixpoint.
+_ROUNDS_PER_CHECK = 3
 
-def connected_components_edges(
-    edges: DataFrame,
-    a_col: str = "a",
-    b_col: str = "b",
-    max_iter: int = 25,
-    rounds_per_check: int = 3,
-    growth: float = 1.0,
-    pre_checkpointed: bool = False,
-    hook_labels: bool = True,
-) -> DataFrame:
+
+def key_edges(incidence: DataFrame) -> DataFrame:
+    """(node, key) incidence -> (a, b) pair edges linking every member of a
+    key to the key's minimum member: one combinable min aggregation by key
+    and one join. The star spans the same component as the key and keeps
+    the component's minimum node, so CC labels (canonical ids) are those of
+    the hyper-key graph. A single-member key yields a self-loop, so an
+    isolated node is kept. Duplicate (node, key) rows only duplicate
+    edges, which CC drops when it symmetrizes."""
+    kmin = incidence.groupBy("key").agg(F.min("node").alias("a"))
+    return incidence.join(kmin, "key").select("a", F.col("node").alias("b"))
+
+
+def _is_checkpoint_leaf(df: DataFrame) -> bool:
+    """True iff df's plan is a bare, already-materialized checkpoint (an
+    eager localCheckpoint()/checkpoint()); inspects the analyzed plan, runs
+    no job. A lazy checkpoint or a projection over a leaf is not one."""
+    p = df._jdf.queryExecution().analyzed()
+    return p.getClass().getSimpleName() == "LogicalRDD" and p.rdd().isCheckpointed()
+
+
+def connected_components_edges(edges: DataFrame, max_iter: int = 25) -> DataFrame:
     """(a, b) undirected pair edges -> (node, component) with component =
-    min node id reachable — the pair-edge specialization of
-    connected_components (r6).
+    min node id reachable.
 
-    Why a separate path: the incidence formulation spends TWO joins + TWO
-    aggregations per propagation round (node→key, key→node) because a
-    hyper-key may connect many nodes. A pair edge connects exactly two, so
-    one round collapses to ONE join + ONE aggregation over a symmetrized,
+    One round is ONE join + ONE aggregation over the symmetrized,
     self-looped edge list: the self-loop row carries each node's own label
     into the groupBy, making min(label) exactly least(own, neighbors), and
     an `own` flag on the self row lets the same aggregation emit the old
-    label — so the convergence check needs no extra join either. Per-round
-    labels are identical to the incidence form (one edge-hop per round),
-    so round counts and the converged fixpoint match exactly; measured at
-    sf0.1 near-dedup this halves the CC stage count per round.
-
-    `growth` scales `rounds_per_check` per block; the DEFAULT is 1.0 (fixed
-    3-round blocks) because it won the measurement BOTH ways: at sf0.1
-    growth=2.0 executes 3+6+12=21 rounds for a diameter-12 graph (9 wasted
-    post-fixpoint rounds) and measured SLOWER than fixed blocks (3.10s vs
-    2.19s min-of-3; growth 1.0/1.5 tie), and at 100 TB a wasted round is a
-    real O(V+E) shuffle while fixed blocks bound the waste at
-    rounds_per_check-1. Convergence detection is exact for any schedule:
-    labels are monotone and propagation is stationary, so "last round of
-    the block changed nothing" IS the fixpoint.
-
-    `hook_labels` (r6): after each non-converged block, the next block's
-    edge list is base ∪ {node ↔ current label} — every hook connects two
-    nodes ALREADY in one component (a label is always a reachable node),
-    so components and the converged labels are IDENTICAL, while the
-    effective diameter contracts geometrically (each block can traverse
-    the hops all previous blocks discovered in one round: Shiloach-
-    Vishkin-style hooking, without pointer jumping's per-round self-join
-    that measured net-worse here). The hooks are rebuilt per block from
-    the just-checkpointed labels frame against the UNCHANGED base list —
-    a narrow union, no extra action, and stale hooks are never carried.
-    Measured: the diameter-12 sf0.1 near-dedup graph converges in 9
-    rounds instead of 12 (1.95 → 1.74 s); a diameter-60 chain in 12
-    instead of 63 (6.8 → 1.8 s) — the long-chain robustness also retires
-    the max_iter hazard for templated corpora."""
-    # checkpoint the input projection ONCE before fanning out: sym below
-    # references the edge frame three times (fwd, rev, node set) and an
+    label — so the convergence check needs no extra join either.
+    `max_iter` bounds total propagation rounds; a graph still changing
+    after it warns (labels may be non-minimal) rather than capping
+    silently."""
+    # materialize the input projection ONCE before fanning out: sym below
+    # reads the edge frame three times (fwd, rev, node set) and an
     # expensive caller plan (the near-dedup verify chain, a triple
-    # assembly) would otherwise execute three times inside one job.
-    # `pre_checkpointed=True` skips that action when the CALLER's edge
-    # frame is already a checkpoint leaf (the dedup chain checkpoints its
-    # tagged edge union right before calling CC) — re-materializing a
-    # leaf's narrow projection was one more whole job of pure latency (r6)
-    e = edges.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-    if not pre_checkpointed:
+    # assembly) would otherwise execute three times inside one job. An
+    # input that already is a checkpoint leaf (the dedup chain's tagged
+    # edge union) skips that action — re-materializing a leaf's narrow
+    # projection is one more whole job of pure latency
+    e = edges.select(F.col("a").alias("src"), F.col("b").alias("dst"))
+    if not _is_checkpoint_leaf(edges):
         e = e.localCheckpoint()
     rev = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     nodes = e.unionByName(rev).select("src").distinct()
@@ -122,12 +122,11 @@ def connected_components_edges(
 
     n_changed = 0
     done = 0
-    k = max(1, rounds_per_check)
     sym_base = sym
     while done < max_iter:
-        k_eff = min(k, max_iter - done)
+        k = min(_ROUNDS_PER_CHECK, max_iter - done)
         cur = labels
-        for _ in range(k_eff):
+        for _ in range(k):
             cur = (
                 sym.join(cur.select(F.col("node").alias("dst"), "label"), "dst")
                 .groupBy("src")
@@ -140,133 +139,35 @@ def connected_components_edges(
                 .select(F.col("src").alias("node"), "label", "_old")
             )
         new_labels = cur.localCheckpoint()
-        done += k_eff
+        done += k
         n_changed = (
             new_labels.filter(F.col("label") < F.col("_old")).limit(1).count()
         )
         labels = new_labels.drop("_old")
         if n_changed == 0:
             break
-        k = max(k, int(k * growth))
-        if hook_labels:
-            # node ↔ label hooks off the just-checkpointed labels frame:
-            # intra-component by construction (fixpoint unchanged), and a
-            # duplicate of a base edge only feeds the same value into the
-            # MIN aggregations again — so no dedup shuffle is spent here
-            hooks = labels.filter(F.col("node") != F.col("label"))
-            sym = (
-                sym_base.unionByName(
-                    hooks.select(
-                        F.col("node").alias("src"),
-                        F.col("label").alias("dst"),
-                        F.lit(False).alias("own"),
-                    )
-                ).unionByName(
-                    hooks.select(
-                        F.col("label").alias("src"),
-                        F.col("node").alias("dst"),
-                        F.lit(False).alias("own"),
-                    )
-                )
+        # node ↔ label hooks off the just-checkpointed labels frame:
+        # intra-component by construction (fixpoint unchanged), and a
+        # duplicate of a base edge only feeds the same value into the
+        # MIN aggregations again — so no dedup shuffle is spent here
+        hooks = labels.filter(F.col("node") != F.col("label"))
+        sym = sym_base.unionByName(
+            hooks.select(
+                F.col("node").alias("src"),
+                F.col("label").alias("dst"),
+                F.lit(False).alias("own"),
             )
+        ).unionByName(
+            hooks.select(
+                F.col("label").alias("src"),
+                F.col("node").alias("dst"),
+                F.lit(False).alias("own"),
+            )
+        )
 
     if n_changed != 0:
-        import warnings
-
         warnings.warn(
             f"connected_components_edges did not converge within max_iter="
-            f"{max_iter} rounds (component diameter exceeds it); labels "
-            "may be non-minimal. Raise max_iter.",
-            stacklevel=2,
-        )
-
-    return labels.withColumnRenamed("label", "component")
-
-
-def connected_components(
-    incidence: DataFrame,
-    node_col: str = "node",
-    key_col: str = "key",
-    max_iter: int = 25,
-    checkpoint_every: int = 1,
-    rounds_per_check: int = 3,
-) -> DataFrame:
-    """incidence: (node, key) pairs -> (node, component) with component =
-    min node id in the connected component. Isolated nodes (no key rows)
-    must still appear with a null/unique key if they should be retained;
-    callers typically union them back afterwards.
-
-    `rounds_per_check` (r6): propagation rounds executed per convergence
-    check + lineage checkpoint. On contract/bench-scale graphs each
-    round's cost is DRIVER/scheduling latency, not data (measured ~0.3s
-    per round at sf1.0 near-dedup, 19 rounds = 6s of the query): batching
-    k rounds into one job amortizes the two actions (checkpoint + changed
-    count) over k edge-hops. Labels decrease monotonically, so a
-    converged block is exactly a no-change block — at worst k-1 no-op
-    rounds run after the fixpoint, and the labels are identical. `max_iter`
-    still bounds TOTAL propagation rounds. `checkpoint_every` is counted
-    in blocks."""
-    inc = incidence.select(
-        F.col(node_col).alias("node"), F.col(key_col).alias("key")
-    ).dropDuplicates(["node", "key"]).localCheckpoint()
-
-    labels = inc.select("node").distinct().withColumn("label", F.col("node"))
-    labels = labels.localCheckpoint()
-
-    n_changed = 0
-    done = 0
-    block = 0
-    while done < max_iter:
-        k = min(max(1, rounds_per_check), max_iter - done)
-        cur = labels
-        for _ in range(k):
-            kmin = (
-                inc.join(cur, "node")
-                .groupBy("key")
-                .agg(F.min("label").alias("kmin"))
-            )
-            cand = (
-                inc.join(kmin, "key")
-                .groupBy("node")
-                .agg(F.min("kmin").alias("cand"))
-            )
-            cur = (
-                cur.join(cand, "node", "left")
-                .select(
-                    "node",
-                    F.least(F.col("label"), F.coalesce("cand", "label")).alias("label"),
-                )
-            )
-            # (r6 note: pointer jumping — label <- label(label) — was
-            # re-measured on the sf1.0 near-dedup graph: it does cut
-            # rounds 19 -> 10, but the extra self-join per round costs
-            # more than the rounds it saves on these latency-bound
-            # graphs; same verdict as r5, now with round counts on
-            # record. AQE OFF for the loop was also tried and is 2-4x
-            # WORSE: the runtime broadcast-join conversion is what keeps
-            # the per-round joins cheap.)
-        new_labels = cur.join(
-            labels.select("node", F.col("label").alias("_label0")), "node"
-        ).select(
-            "node", "label", (F.col("label") < F.col("_label0")).alias("changed")
-        )
-        done += k
-        block += 1
-        if checkpoint_every and block % checkpoint_every == 0:
-            new_labels = new_labels.localCheckpoint()
-        n_changed = new_labels.filter(F.col("changed")).limit(1).count()
-        labels = new_labels.drop("changed")
-        if n_changed == 0:
-            break
-
-    if n_changed != 0:
-        # no silent caps: labels are still moving after max_iter rounds
-        # (component diameter > max_iter) — surviving labels may be
-        # non-minimal, which downstream reads as wrong survivors
-        import warnings
-
-        warnings.warn(
-            f"connected_components did not converge within max_iter="
             f"{max_iter} rounds (component diameter exceeds it); labels "
             "may be non-minimal. Raise max_iter.",
             stacklevel=2,

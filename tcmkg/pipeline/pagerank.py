@@ -23,7 +23,7 @@ Scale design (the 10^9-node case):
   * the contribution aggregation is a SUM groupBy dst — map-side combinable,
     so a hub with millions of in-edges contributes one partial row per map
     partition (the same hot-entity argument as pipeline/cc.py).
-  * lineage is truncated with localCheckpoint every `checkpoint_every`
+  * lineage is truncated with localCheckpoint every _CHECKPOINT_PERIOD
     iterations so the plan stays O(1) deep regardless of iteration count
     (without it, iteration t re-plans t nested joins).
   * iterations are FIXED (power method), not convergence-tested — no
@@ -36,6 +36,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# iterations between rank-frame localCheckpoints
+_CHECKPOINT_PERIOD = 2
+
 
 def pagerank(
     edges: DataFrame,
@@ -44,7 +47,6 @@ def pagerank(
     damping: float = 0.85,
     iters: int = 6,
     round_to: int | None = 6,
-    checkpoint_every: int = 2,
     weight_col: str | None = None,
 ) -> DataFrame:
     """edges: directed (src, dst) pairs (deduplicated internally; parallel
@@ -98,7 +100,7 @@ def pagerank(
             "node",
             (base + F.lit(damping) * F.coalesce("s", F.lit(0.0))).alias("r"),
         )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0 and i + 1 < iters:
+        if (i + 1) % _CHECKPOINT_PERIOD == 0 and i + 1 < iters:
             ranks = ranks.localCheckpoint()
 
     r = F.col("r")

@@ -130,6 +130,10 @@ def reduce_mentions(mentions: DataFrame) -> DataFrame:
         mentions.filter(
             (F.col("kind") != "unlinked")
             & ~((F.col("kind") == "p_symptom") & F.col("buke"))
+            # a pair needs both ends: NULL keys would co-group in the
+            # grouped assembly (see _assemble_grouped)
+            & F.col("subj").isNotNull()
+            & F.col("obj").isNotNull()
         )
         .groupBy("kind", "subj", "obj")
         .agg(
@@ -137,17 +141,6 @@ def reduce_mentions(mentions: DataFrame) -> DataFrame:
             F.sum("n_null").alias("n_null"),
             F.sum("n_ml").alias("n_ml"),
         )
-    )
-
-
-def distinct_pairs(mentions: DataFrame) -> DataFrame:
-    """Dedup (kind, subj, obj) across the mention stream for all
-    non-weighted predicates (see reduce_mentions, which assembly uses to
-    get this AND the dose totals in one shuffle)."""
-    return (
-        reduce_mentions(mentions)
-        .filter(F.col("kind") != "contains")
-        .select("kind", "subj", "obj")
     )
 
 
@@ -461,9 +454,9 @@ def _assemble_grouped(reduced: DataFrame) -> DataFrame:
     (kg_all_edges covers all 47 families in one hash). Scale shape: the
     one shuffle moves O(distinct pairs) rows; collect_set fan-in is
     bounded by the kind vocabulary (≤ 2×47), so there are no hot keys.
-    NULL pair keys would group where the join form kept them apart, but
-    the extraction kernels emit only matched non-null strings (and
-    reduce_mentions already groups by the same keys)."""
+    NULL pair keys would group where the join form kept them apart;
+    reduce_mentions' filter drops rows with a NULL subj or obj, so
+    `reduced` never carries one."""
     pairs = reduced.filter(F.col("kind") != "contains").select(
         "kind", "subj", "obj"
     )

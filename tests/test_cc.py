@@ -33,14 +33,14 @@ def _group(labels: dict) -> set[frozenset]:
     )
 )
 def test_cc_matches_union_find(spark, pairs):
-    from tcmkg.pipeline.cc import connected_components
+    from tcmkg.pipeline.cc import connected_components_edges, key_edges
 
     inc = spark.createDataFrame(
         [(f"n{n:03d}", f"k{k:03d}") for n, k in pairs], "node string, key string"
     )
     got = {
         r["node"]: r["component"]
-        for r in connected_components(inc).collect()
+        for r in connected_components_edges(key_edges(inc)).collect()
     }
     want = _uf_components([(f"n{n:03d}", f"k{k:03d}") for n, k in pairs])
     # same grouping
@@ -52,12 +52,15 @@ def test_cc_matches_union_find(spark, pairs):
 
 def test_cc_chain_and_hot_key(spark):
     """Chain A-B-C-D through distinct keys + one hot key shared by many."""
-    from tcmkg.pipeline.cc import connected_components
+    from tcmkg.pipeline.cc import connected_components_edges, key_edges
 
     rows = [("a", "k1"), ("b", "k1"), ("b", "k2"), ("c", "k2"), ("c", "k3"), ("d", "k3")]
     rows += [(f"z{i:04d}", "hot") for i in range(500)]
     inc = spark.createDataFrame(rows, "node string, key string")
-    got = {r["node"]: r["component"] for r in connected_components(inc).collect()}
+    got = {
+        r["node"]: r["component"]
+        for r in connected_components_edges(key_edges(inc)).collect()
+    }
     assert got["a"] == got["b"] == got["c"] == got["d"] == "a"
     assert got["z0499"] == "z0000"
     assert len(got) == 504
@@ -84,7 +87,7 @@ def test_salted_distinct_count(spark):
 def test_cc_medium_scale(spark):
     """A 60k-node / 75k-incidence graph with long chains and a giant skewed
     component: converges, deterministic min-representatives, sane runtime."""
-    from tcmkg.pipeline.cc import connected_components
+    from tcmkg.pipeline.cc import connected_components_edges, key_edges
 
     rows = []
     # 5k chain components of length 10 (diameter stress)
@@ -95,7 +98,7 @@ def test_cc_medium_scale(spark):
     # one giant skewed component: 10k nodes on one hot key
     rows += [(f"hot{i:05d}", "HOTKEY") for i in range(10000)]
     inc = spark.createDataFrame(rows, "node string, key string")
-    got = connected_components(inc, max_iter=30)
+    got = connected_components_edges(key_edges(inc), max_iter=30)
     comps = {r["node"]: r["component"] for r in got.collect()}
     assert comps["hot09999"] == "hot00000"
     assert comps["n00042_09"] == "n00042_00"
@@ -133,46 +136,72 @@ def test_cc_edges_matches_union_find(spark, pairs):
         assert c == min(_g for _g in got if got[_g] == c)
 
 
-def test_cc_edges_pre_checkpointed_identical(spark):
-    """r6: `pre_checkpointed=True` (the dedup chain's path — its tagged
-    edge union is already a checkpoint leaf) skips only the input
-    re-materialization action; labels and representatives are identical
-    to the default path."""
-    from tcmkg.pipeline.cc import connected_components_edges
+def test_cc_edges_detects_checkpoint_leaf(spark):
+    """CC skips materializing its input only when that input is already an
+    eager checkpoint leaf (the dedup chain's tagged edge union): labels are
+    identical either way, the leaf runs one job fewer, and a lazy
+    checkpoint or a projection over a leaf is not taken for one."""
+    from tcmkg.pipeline.cc import _is_checkpoint_leaf, connected_components_edges
 
+    sc = spark.sparkContext
     rows = [(f"n{a:03d}", f"n{b:03d}") for a, b in
             [(0, 1), (1, 2), (5, 6), (6, 7), (7, 5), (9, 9)]]
-    edges = spark.createDataFrame(rows, "a string, b string").localCheckpoint()
-    base = {
-        r["node"]: r["component"]
-        for r in connected_components_edges(edges).collect()
-    }
-    fast = {
-        r["node"]: r["component"]
-        for r in connected_components_edges(edges, pre_checkpointed=True).collect()
-    }
-    assert base == fast and set(fast.values()) == {"n000", "n005", "n009"}
+    plain = spark.createDataFrame(rows, "a string, b string")
+    leaf = plain.localCheckpoint()
+
+    def run(edges, group):
+        sc.setJobGroup(group, group)
+        try:
+            got = {
+                r["node"]: r["component"]
+                for r in connected_components_edges(edges).collect()
+            }
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return got, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    # AQE submits query stages as jobs whose number varies with timing, so
+    # jobs are counted with it off: then each action is a fixed job set
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        got_plain, jobs_plain = run(plain, "cc-leaf-test-plain")
+        got_leaf, jobs_leaf = run(leaf, "cc-leaf-test-leaf")
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert got_plain == got_leaf
+    assert set(got_leaf.values()) == {"n000", "n005", "n009"}
+    # the one job saved is the input checkpoint
+    assert jobs_leaf == jobs_plain - 1
+
+    assert _is_checkpoint_leaf(leaf)
+    assert not _is_checkpoint_leaf(plain)
+    assert not _is_checkpoint_leaf(plain.localCheckpoint(eager=False))
+    assert not _is_checkpoint_leaf(leaf.select("a", "b"))
+    assert not _is_checkpoint_leaf(leaf.filter("a != b"))
 
 
 def test_cc_edges_label_hooks(spark):
-    """r6 hook acceleration: hooks connect a node to its current label —
-    always intra-component — so the fixpoint is identical to the unhooked
-    propagation wherever both converge, and a diameter-60 chain (which
-    the unhooked form cannot finish inside the default max_iter=25)
-    converges to the single true component."""
+    """Hooks connect a node to its current label — always intra-component
+    — so the fixpoint is the union-find partition with min-id
+    representatives, and a diameter-60 chain (which unhooked propagation
+    cannot finish inside the default max_iter=25) converges to the single
+    true component."""
     import warnings
 
     from tcmkg.pipeline.cc import connected_components_edges
 
+    pairs = [(0, 1), (1, 2), (2, 3), (7, 8), (8, 9)]
     edges = spark.createDataFrame(
-        [(f"n{a}", f"n{b}") for a, b in [(0, 1), (1, 2), (2, 3), (7, 8), (8, 9)]],
-        "a string, b string",
+        [(f"n{a}", f"n{b}") for a, b in pairs], "a string, b string"
     )
-    plain = {r["node"]: r["component"]
-             for r in connected_components_edges(edges, hook_labels=False).collect()}
-    hooked = {r["node"]: r["component"]
-              for r in connected_components_edges(edges, hook_labels=True).collect()}
-    assert plain == hooked
+    got = {r["node"]: r["component"]
+           for r in connected_components_edges(edges).collect()}
+    uf = _UnionFind()
+    for a, b in pairs:
+        uf.union(f"n{a}", f"n{b}")
+    assert got == {n: uf.find(n) for n in got}
+    assert set(got.values()) == {"n0", "n7"} and len(got) == 7
 
     chain = spark.createDataFrame(
         [(f"n{i:05d}", f"n{i + 1:05d}") for i in range(60)], "a string, b string"
@@ -199,3 +228,30 @@ def test_cc_edges_long_chain_block_boundary(spark):
     got = {r["node"]: r["component"] for r in connected_components_edges(edges).collect()}
     assert set(got.values()) == {"n00"}
     assert len(got) == n + 1
+
+
+@pytest.mark.parametrize("etype", ["herb", "symptom"])
+def test_canonicalize_matches_oracle(spark, etype):
+    """canonicalize (hyper-keys reduced to pair edges, then the pair-edge
+    CC) gives the oracle union-find's alias map, in fixture record order
+    and in a shuffled one: canonical ids do not depend on input order."""
+    import random
+
+    from tcmkg.fixtures.gazetteers import (
+        CANON_PREFIX, build_gazetteers, records_to_rows,
+    )
+    from tcmkg.oracle.extractor import canonicalize_records
+    from tcmkg.pipeline.canonicalize import canonicalize, normalize_alias_map
+
+    records = build_gazetteers().tables()[etype]
+    shuffled = list(records)
+    random.Random(7).shuffle(shuffled)
+    schema = "record_id string, names string, symmap_id string, extdb_id string"
+    want = canonicalize_records(records, CANON_PREFIX[etype])[1]
+    for order in (records, shuffled):
+        rec_df = spark.createDataFrame(records_to_rows(order), schema)
+        _, alias2canon = canonicalize(rec_df, CANON_PREFIX[etype])
+        got = normalize_alias_map(
+            [(r["alias"], r["canonical_id"]) for r in alias2canon.collect()]
+        )
+        assert got == want

@@ -310,3 +310,34 @@ def test_stage_resume_schema_guard(tmp_path, spark):
     got = store.run_stage(spark, "s", lambda: new, expect_cols=["b"])
     assert set(got.columns) == {"a", "b"}
     assert set(store.read(spark, "s").columns) == {"a", "b"}
+
+
+def test_assembly_drops_null_pair_keys(spark):
+    """reduce_mentions drops mention rows with a NULL subj or obj, so the
+    grouped assembly never co-groups NULL keys: extra null-key rows (which
+    would otherwise publish NULL-ended triples and de-conflict each other)
+    leave assemble_triples' rows unchanged."""
+    from tcmkg.pipeline.extract import MENTION_SCHEMA
+    from tcmkg.pipeline.triples import assemble_triples
+
+    def frame(pairs):
+        return spark.createDataFrame(
+            [(k, s, o, 1, 2.0, 2.0, 2.0, 0, 0, False) for k, s, o in pairs],
+            MENTION_SCHEMA,
+        )
+
+    clean = [
+        ("treats", "h1", "d1"), ("treats", "h2", "d1"),
+        ("induces", "h2", "d1"), ("is_a", "d1", "d2"),
+        ("contains", "f1", "h1"), ("h_symptom", "h1", "s1"),
+    ]
+    nulls = [
+        ("treats", None, "d1"), ("induces", None, "d1"),
+        ("is_a", "d2", None), ("is_a", None, "d2"),
+        ("contains", "f1", None), ("h_symptom", None, None),
+    ]
+    rows = lambda df: {
+        (r["subj"], r["pred"], r["obj"], r["weight"]) for r in df.collect()
+    }
+    want = rows(assemble_triples(frame(clean)))
+    assert want and rows(assemble_triples(frame(clean + nulls))) == want

@@ -231,9 +231,9 @@ def main() -> None:
             "of its own); each iteration shuffles only the O(V) rank frame "
             "to meet it plus one map-side-combinable SUM groupBy dst — the "
             "hub-in-degree argument from pipeline/cc.py. Lineage is "
-            "truncated every checkpoint_every iterations so the plan depth "
+            "truncated every _CHECKPOINT_PERIOD iterations so the plan depth "
             "is O(1) in the iteration count.",
-            *render(pagerank(pr_edges, iters=1, checkpoint_every=0)),
+            *render(pagerank(pr_edges, iters=1)),
         )
     )
 
