@@ -522,7 +522,7 @@ def transcriptize(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(r6 == 1, F.concat(g_ing, F.lit("下调"), g_tgt, F.lit("。")))
         .when(r6 == 2, F.concat(g_ing, F.lit("作用于"), g_tgt, F.lit("。")))
         # up∩down conflict in one turn: both directional edges die
-        # corpus-wide, pair moves to associate (triples.gene_edges)
+        # corpus-wide, pair moves to associate (triples._assemble_grouped)
         .when(r6 == 3, F.concat(g_ing, F.lit("上调"), g_tgt,
                                 F.lit("，亦下调"), g_tgt, F.lit("。")))
         # assoc∩up priority: the generic associate edge loses

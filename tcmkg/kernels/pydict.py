@@ -67,11 +67,6 @@ def parse_literal_dict(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
         yield batch.map(parse_literal_dict_py)
 
 
-def prop_values(parsed: Column, key: str) -> Column:
-    """extract_properties for one key: the raw (array) value or NULL."""
-    return parsed.getItem(key)
-
-
 def prop_first(parsed: Column, key: str) -> Column:
     """Scalar property: first element of the normalized array, or NULL.
 

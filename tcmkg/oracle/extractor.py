@@ -47,13 +47,11 @@ Post:
       grammar); formulas with any ml-unit or any unparseable linked dose get
       null weights; else weight = dose/formula_total, summed per (subj,obj),
       all-null -> null.
-  prescription_treat_symptom: drop lines whose indication tail contains 不渴;
-      then drop formulas with >=50 distinct symptoms (degree cap).
-  herb_treats_disease: treats minus (treats ∩ induces) pairs.
-  disease_is_a_disease: drop pairs present in both directions (both sides).
-  ingredient→gene: up∩down pairs move to associate (removed from both
-      directional sets); associate then loses any pair still present in a
-      directional set (extract_target.py:365-372 + 404-417).
+  prescription_treat_symptom: lines whose indication tail contains 不渴
+      link no symptom.
+  Every other family: `publish`, a pure function from per-kind pair sets
+      to triples (degree cap, treats/induces, is_a, the gene and
+      ingredient de-conflict rules, mutual-pair collapse).
   All predicates deduplicated on (subj, pred, obj).
 Canonical entities: per-gazetteer union-find over records sharing any
       (column, token) key from names/symmap_id/extdb_id; canonical id =
@@ -202,22 +200,8 @@ class OracleExtractor:
             convs[conv].append(r)
 
         contains_rows: list[tuple[str, str, str | None]] = []  # formula, herb, dose
-        psym_rows: list[tuple[str, str, str]] = []  # formula, symptom, ind_text
-        psyn_rows: list[tuple[str, str]] = []
-        treats: set[tuple[str, str]] = set()
-        induces: set[tuple[str, str]] = set()
-        indicates: set[tuple[str, str]] = set()
-        is_a: set[tuple[str, str]] = set()
-        dims: set[tuple[str, str, str]] = set()  # (herb, pred, dim_id)
-        consistof: set[tuple[str, str]] = set()
-        up_gene: set[tuple[str, str]] = set()
-        down_gene: set[tuple[str, str]] = set()
-        assoc_gene: set[tuple[str, str]] = set()
-        bind_gene: set[tuple[str, str]] = set()
-        i_treat: set[tuple[str, str]] = set()
-        i_induce: set[tuple[str, str]] = set()
-        i_contra: set[tuple[str, str]] = set()
-        pclass: set[tuple[str, str]] = set()
+        # kind -> deduped (subj, obj) pairs, keyed by the pipeline's kinds
+        pairs: dict[str, set[tuple[str, str]]] = defaultdict(set)
 
         from ..fixtures.dimensions import dim_maps
         from ..kernels.matcher import clause_window
@@ -243,18 +227,6 @@ class OracleExtractor:
         # kernel (reference shapes: extract_target.py:425-493 gene↔gene,
         # :520-607 disease→gene, :653-761 gene→pathway/GO unions, :612-658
         # anatomy express)
-        sent_sinks: dict[str, set[tuple[str, str]]] = {
-            k: set()
-            for k in (
-                "gg_reg", "gg_cov", "gg_assoc", "dg_up", "dg_down",
-                "dg_assoc", "g_pathway", "g_bioproc", "g_cellcomp",
-                "g_molfunc", "anat_express", "i_cause_se", "i_might_se",
-                "anat_up", "anat_down", "dis_resemble", "ing_resemble",
-                "ing_interact", "h_symptom", "h_syndrome", "dis_present",
-                "syn_present", "pw_disease", "i_pathway", "i_bioproc",
-                "i_cellcomp", "i_molfunc", "ts_mm",
-            )
-        }
         sent_handlers = [
             ("调控", "target", "target", "gg_reg"),
             ("共变", "target", "target", "gg_cov"),
@@ -334,59 +306,62 @@ class OracleExtractor:
                     else:
                         fid = last_formula
                     if fid is not None:
-                        for s in self.ac["symptom"].find_set(tail):
-                            psym_rows.append((fid, self.maps["symptom"][s], tail))
+                        # a 不渴 line links no symptom
+                        # (add_more_prescription_symptom_map.py:67-80)
+                        if "不渴" not in tail:
+                            for s in self.ac["symptom"].find_set(tail):
+                                pairs["p_symptom"].add((fid, self.maps["symptom"][s]))
                         for s in self.ac["syndrome"].find_set(tail):
-                            psyn_rows.append((fid, self.maps["syndrome"][s]))
+                            pairs["p_syndrome"].add((fid, self.maps["syndrome"][s]))
                     handled = True
                 if "可治" in t:
                     hs = self.ac["herb"].find_set(t)
                     ds = self.ac["disease"].find_set(t)
                     for h in hs:
                         for d in ds:
-                            treats.add((hmap[h], self.maps["disease"][d]))
+                            pairs["treats"].add((hmap[h], self.maps["disease"][d]))
                 if "可致" in t:
                     hs = self.ac["herb"].find_set(t)
                     ds = self.ac["disease"].find_set(t)
                     for h in hs:
                         for d in ds:
-                            induces.add((hmap[h], self.maps["disease"][d]))
+                            pairs["induces"].add((hmap[h], self.maps["disease"][d]))
                 if "含有" in t:
                     left, _, right = t.partition("含有")
                     for h in self.ac["herb"].find_set(left):
                         for ing in self.ac["ingredient"].find_set(right):
-                            consistof.add((hmap[h], self.maps["ingredient"][ing]))
-                for marker, sink in (
-                    ("上调", up_gene), ("下调", down_gene),
-                    ("作用于", assoc_gene), ("绑定", bind_gene),
+                            pairs["consistof"].add((hmap[h], self.maps["ingredient"][ing]))
+                for marker, kind in (
+                    ("上调", "up_gene"), ("下调", "down_gene"),
+                    ("作用于", "assoc_gene"), ("绑定", "bind_gene"),
                 ):
                     if marker in t:
                         left, _, right = t.partition(marker)
                         for ing in self.ac["ingredient"].find_set(left):
                             for g in self.ac["target"].find_set(right):
-                                sink.add(
+                                pairs[kind].add(
                                     (self.maps["ingredient"][ing], self.maps["target"][g])
                                 )
-                for marker, sink in (
-                    ("能治", i_treat), ("能致", i_induce), ("忌用于", i_contra),
+                for marker, kind in (
+                    ("能治", "i_treat"), ("能致", "i_induce"), ("忌用于", "i_contra"),
                 ):
                     if marker in t:
                         left, _, right = t.partition(marker)
                         for ing in self.ac["ingredient"].find_set(left):
                             for d in self.ac["disease"].find_set(right):
-                                sink.add(
+                                pairs[kind].add(
                                     (self.maps["ingredient"][ing], self.maps["disease"][d])
                                 )
                 if "归为" in t:
                     left, _, right = t.partition("归为")
                     for ing in self.ac["ingredient"].find_set(left):
                         for pc in ac_pc.find_set(right):
-                            pclass.add((self.maps["ingredient"][ing], pc_map[pc]))
+                            pairs["pclass"].add((self.maps["ingredient"][ing], pc_map[pc]))
                 if "包括" in t:
                     left, _, right = t.partition("包括")
                     for pc in ac_pc.find_set(left):
                         for ing in self.ac["ingredient"].find_set(right):
-                            pclass.add((self.maps["ingredient"][ing], pc_map[pc]))
+                            pairs["pclass"].add((self.maps["ingredient"][ing], pc_map[pc]))
                 for mk, sname, oname, kind in sent_handlers:
                     if mk in t:
                         ac_s, map_s = side[sname]
@@ -396,13 +371,13 @@ class OracleExtractor:
                             for o in ac_o.find_set(rs):
                                 cs, co = map_s[s], map_o[o]
                                 if cs != co:
-                                    sent_sinks[kind].add((cs, co))
+                                    pairs[kind].add((cs, co))
                 if "溯源" in t:
                     # mm-first direction, swapped emit -> (tcm, mm)
                     ls, rs = clause_window(t, "溯源")
                     for mm in self.ac["mm_symptom"].find_set(ls):
                         for s in self.ac["symptom"].find_set(rs):
-                            sent_sinks["ts_mm"].add(
+                            pairs["ts_mm"].add(
                                 (self.maps["symptom"][s],
                                  self.maps["mm_symptom"][mm])
                             )
@@ -410,14 +385,14 @@ class OracleExtractor:
                     head, _, seg = t.partition("其性")
                     for h in self.ac["herb"].find_set(head):
                         for kind, did in parse_dim_clause(seg):
-                            dims.add((hmap[h], DIM_PRED_OF_KIND[kind], did))
+                            pairs[kind].add((hmap[h], did))
                 if not handled and "常见" in t:
                     left, _, right = t.partition("常见")
                     syns = self.ac["syndrome"].find_set(left)
                     syms = self.ac["symptom"].find_set(right)
                     for sy in syns:
                         for sm in syms:
-                            indicates.add(
+                            pairs["indicates"].add(
                                 (self.maps["symptom"][sm], self.maps["syndrome"][sy])
                             )
                 elif not handled and "属于" in t:
@@ -426,7 +401,7 @@ class OracleExtractor:
                         for b in self.ac["disease"].find_set(right):
                             ca, cb = self.maps["disease"][a], self.maps["disease"][b]
                             if ca != cb:
-                                is_a.add((ca, cb))
+                                pairs["is_a"].add((ca, cb))
 
         triples: set[tuple] = set()
 
@@ -444,147 +419,131 @@ class OracleExtractor:
                 totals[fid] += amt
         wsum: dict[tuple[str, str], float] = defaultdict(float)
         has_w: set[tuple[str, str]] = set()
-        pairs: set[tuple[str, str]] = set()
+        linked: set[tuple[str, str]] = set()
         for fid, hid, amt, _ in amounts:
-            pairs.add((fid, hid))
+            linked.add((fid, hid))
             if fid not in dropped and amt is not None and totals[fid] > 0:
                 wsum[(fid, hid)] += amt / totals[fid]
                 has_w.add((fid, hid))
-        for fid, hid in pairs:
+        for fid, hid in linked:
             w = wsum[(fid, hid)] if (fid, hid) in has_w else None
             triples.add((fid, PRED_CONTAINS, hid, w))
 
-        # ---- prescription_treat_symptom: 不渴 drop + degree cap ----
-        kept = {(f, s) for f, s, tail in psym_rows if "不渴" not in tail}
-        deg: dict[str, set[str]] = defaultdict(set)
-        for f, s in kept:
-            deg[f].add(s)
-        capped = {f for f, ss in deg.items() if len(ss) >= DEGREE_CAP}
-        for f, s in kept:
-            if f not in capped:
-                triples.add((f, PRED_P_SYMPTOM, s, None))
+        return triples | publish(pairs)
 
-        for f, s in set(psyn_rows):
-            triples.add((f, PRED_P_SYNDROME, s, None))
 
-        for h, d in treats - induces:
-            triples.add((h, PRED_TREATS, d, None))
+# kinds whose pair set publishes as-is: no weighting, cap or conflict rule.
+# This includes the pass-through halves of the algebra families: bind
+# (extract_target.py:303-308), gene↔gene regulate/covary and disease→gene
+# up/down (only their associate siblings are filtered)
+_PLAIN_PRED = {
+    "p_syndrome": PRED_P_SYNDROME,
+    "indicates": PRED_INDICATES,
+    **DIM_PRED_OF_KIND,
+    "consistof": PRED_CONSISTOF,
+    "pclass": PRED_PCLASS,
+    "bind_gene": PRED_BIND,
+    "gg_reg": PRED_GG_REG,
+    "gg_cov": PRED_GG_COV,
+    "dg_up": PRED_DG_UP,
+    "dg_down": PRED_DG_DOWN,
+    "g_pathway": PRED_G_PATHWAY,
+    "g_bioproc": PRED_G_BIOPROC,
+    "g_cellcomp": PRED_G_CELLCOMP,
+    "g_molfunc": PRED_G_MOLFUNC,
+    "anat_express": PRED_ANAT_EXPRESS,
+    "i_cause_se": PRED_I_CAUSE_SE,
+    "i_might_se": PRED_I_MIGHT_SE,
+    "anat_up": PRED_ANAT_UP,
+    "anat_down": PRED_ANAT_DOWN,
+    "h_symptom": PRED_H_SYMPTOM,
+    "h_syndrome": PRED_H_SYNDROME,
+    "dis_present": PRED_DIS_PRESENT,
+    "syn_present": PRED_SYN_PRESENT,
+    "pw_disease": PRED_PW_DISEASE,
+    "i_pathway": PRED_I_PATHWAY,
+    "i_bioproc": PRED_I_BIOPROC,
+    "i_cellcomp": PRED_I_CELLCOMP,
+    "i_molfunc": PRED_I_MOLFUNC,
+    "ts_mm": PRED_TS_MM,
+}
 
-        for sm, sy in indicates:
-            triples.add((sm, PRED_INDICATES, sy, None))
 
-        isa_final = {(a, b) for a, b in is_a if (b, a) not in is_a}
-        for a, b in isa_final:
-            triples.add((a, PRED_IS_A, b, None))
+def _one_way(pairs: set[tuple[str, str]]) -> set[tuple[str, str]]:
+    """Mutual pairs collapse to the subj<obj direction (deterministic
+    analogue of the reference's set-iteration-order remove_rel loop)."""
+    return {(a, b) for a, b in pairs if not ((b, a) in pairs and a > b)}
 
-        # ---- disease resemble (extract_disease.py:311-317): killed by the
-        # PUBLISHED is_a set in either direction
-        isa_kill = isa_final | {(b, a) for a, b in isa_final}
-        for a, b in sent_sinks["dis_resemble"] - isa_kill:
-            triples.add((a, PRED_DIS_RESEMBLE, b, None))
 
-        # ---- ingredient resemble / interact: mutual pairs collapse to the
-        # subj<obj direction (extract_ingredient.py:354-361, 375-383 —
-        # deterministic analogue of the set-iteration-order remove_rel loop)
-        for kind, pred in (
-            ("ing_resemble", PRED_ING_RESEMBLE),
-            ("ing_interact", PRED_ING_INTERACT),
-        ):
-            s0 = sent_sinks[kind]
-            kept = {(a, b) for a, b in s0 if not ((b, a) in s0 and a > b)}
-            for a, b in kept:
-                triples.add((a, pred, b, None))
+def publish(pairs_by_kind: dict[str, set[tuple[str, str]]]) -> set[tuple]:
+    """The post-extraction set algebra of every family but
+    formula_contains_herb (whose weighting needs the raw doses):
+    kind -> deduped (subj, obj) pairs in, (subj, pred, obj, None) out.
 
-        for h, pred, did in dims:
-            triples.add((h, pred, did, None))
+    Kinds are the pipeline's mention kinds; `p_symptom` is the pair set
+    after the 不渴 drop, and the degree cap is applied here. The tests
+    hold the pipeline's grouped assembly to this function."""
 
-        for h, ing in consistof:
-            triples.add((h, PRED_CONSISTOF, ing, None))
+    def p(kind: str) -> set[tuple[str, str]]:
+        return pairs_by_kind.get(kind, set())
 
-        # ---- ingredient→gene de-conflict (extract_target.py:365-372,
-        # 404-411: final associate also subtracts bind; bind publishes raw)
-        conflict = up_gene & down_gene
-        up_final = up_gene - conflict
-        down_final = down_gene - conflict
-        assoc_final = (
-            (assoc_gene | conflict) - up_final - down_final - bind_gene
-        )
-        for ing, g in up_final:
-            triples.add((ing, PRED_UP, g, None))
-        for ing, g in down_final:
-            triples.add((ing, PRED_DOWN, g, None))
-        for ing, g in assoc_final:
-            triples.add((ing, PRED_ASSOC, g, None))
-        for ing, g in bind_gene:
-            triples.add((ing, PRED_BIND, g, None))
+    out = {pred: p(kind) for kind, pred in _PLAIN_PRED.items()}
 
-        # ---- ingredient→disease three-way de-conflict
-        # (extract_ingredient.py:514-521): conflict = treats ∩ (induces ∪
-        # contraindicates), dropped from ALL sets; an induces∩contra pair
-        # without a treats claim survives in both
-        id_conflict = (i_treat & i_induce) | (i_treat & i_contra)
-        for ing, d in i_treat - id_conflict:
-            triples.add((ing, PRED_I_TREAT, d, None))
-        for ing, d in i_induce - id_conflict:
-            triples.add((ing, PRED_I_INDUCE, d, None))
-        for ing, d in i_contra - id_conflict:
-            triples.add((ing, PRED_I_CONTRA, d, None))
+    # ---- prescription_treat_symptom: degree cap (merge_tcm_symptom.py:289-294)
+    deg: dict[str, set[str]] = defaultdict(set)
+    for f, s in p("p_symptom"):
+        deg[f].add(s)
+    out[PRED_P_SYMPTOM] = {
+        (f, s) for f, s in p("p_symptom") if len(deg[f]) < DEGREE_CAP
+    }
 
-        for ing, pc in pclass:
-            triples.add((ing, PRED_PCLASS, pc, None))
+    # ---- herb_treats_disease: treats minus (treats ∩ induces)
+    # (extract_ingredient.py:514-515 semantics)
+    out[PRED_TREATS] = p("treats") - p("induces")
 
-        # ---- gene↔gene de-conflict (extract_target.py:453-486): associate
-        # loses pairs present in EITHER direction in covary/regulate, then
-        # mutual associate pairs collapse to the subj<obj direction
-        gg_reg = sent_sinks["gg_reg"]
-        gg_cov = sent_sinks["gg_cov"]
-        directional = gg_reg | gg_cov
-        kill = directional | {(b, a) for a, b in directional}
-        gg_assoc = sent_sinks["gg_assoc"] - kill
-        gg_assoc = {
-            (a, b) for a, b in gg_assoc if not ((b, a) in gg_assoc and a > b)
-        }
-        for a, b in gg_reg:
-            triples.add((a, PRED_GG_REG, b, None))
-        for a, b in gg_cov:
-            triples.add((a, PRED_GG_COV, b, None))
-        for a, b in gg_assoc:
-            triples.add((a, PRED_GG_ASSOC, b, None))
+    # ---- disease_is_a_disease: bidirectional pairs dropped from both sides
+    # (extract_disease.py:288-294)
+    is_a = p("is_a")
+    isa_final = {(a, b) for a, b in is_a if (b, a) not in is_a}
+    out[PRED_IS_A] = isa_final
 
-        # ---- disease→gene (extract_target.py:597-601): assoc − up − down
-        dg_assoc = (
-            sent_sinks["dg_assoc"] - sent_sinks["dg_up"] - sent_sinks["dg_down"]
-        )
-        for d, g in sent_sinks["dg_up"]:
-            triples.add((d, PRED_DG_UP, g, None))
-        for d, g in sent_sinks["dg_down"]:
-            triples.add((d, PRED_DG_DOWN, g, None))
-        for d, g in dg_assoc:
-            triples.add((d, PRED_DG_ASSOC, g, None))
+    # ---- disease resemble (extract_disease.py:311-317): killed by the
+    # PUBLISHED is_a set in either direction
+    isa_kill = isa_final | {(b, a) for a, b in isa_final}
+    out[PRED_DIS_RESEMBLE] = p("dis_resemble") - isa_kill
 
-        # ---- gene→pathway/GO + anatomy express: plain set unions
-        for kind, pred in (
-            ("g_pathway", PRED_G_PATHWAY),
-            ("g_bioproc", PRED_G_BIOPROC),
-            ("g_cellcomp", PRED_G_CELLCOMP),
-            ("g_molfunc", PRED_G_MOLFUNC),
-            ("anat_express", PRED_ANAT_EXPRESS),
-            ("i_cause_se", PRED_I_CAUSE_SE),
-            ("i_might_se", PRED_I_MIGHT_SE),
-            ("anat_up", PRED_ANAT_UP),
-            ("anat_down", PRED_ANAT_DOWN),
-            ("h_symptom", PRED_H_SYMPTOM),
-            ("h_syndrome", PRED_H_SYNDROME),
-            ("dis_present", PRED_DIS_PRESENT),
-            ("syn_present", PRED_SYN_PRESENT),
-            ("pw_disease", PRED_PW_DISEASE),
-            ("i_pathway", PRED_I_PATHWAY),
-            ("i_bioproc", PRED_I_BIOPROC),
-            ("i_cellcomp", PRED_I_CELLCOMP),
-            ("i_molfunc", PRED_I_MOLFUNC),
-            ("ts_mm", PRED_TS_MM),
-        ):
-            for s, o in sent_sinks[kind]:
-                triples.add((s, pred, o, None))
+    # ---- ingredient resemble / interact: mutual pairs collapse
+    # (extract_ingredient.py:354-361, 375-383)
+    out[PRED_ING_RESEMBLE] = _one_way(p("ing_resemble"))
+    out[PRED_ING_INTERACT] = _one_way(p("ing_interact"))
 
-        return triples
+    # ---- ingredient→gene de-conflict (extract_target.py:365-372,
+    # 404-411): up∩down moves to associate; final associate also
+    # subtracts bind; bind publishes raw
+    conflict = p("up_gene") & p("down_gene")
+    out[PRED_UP] = p("up_gene") - conflict
+    out[PRED_DOWN] = p("down_gene") - conflict
+    out[PRED_ASSOC] = (
+        (p("assoc_gene") | conflict) - out[PRED_UP] - out[PRED_DOWN] - p("bind_gene")
+    )
+
+    # ---- ingredient→disease three-way de-conflict
+    # (extract_ingredient.py:514-521): conflict = treats ∩ (induces ∪
+    # contraindicates), dropped from ALL sets; an induces∩contra pair
+    # without a treats claim survives in both
+    id_conflict = p("i_treat") & (p("i_induce") | p("i_contra"))
+    out[PRED_I_TREAT] = p("i_treat") - id_conflict
+    out[PRED_I_INDUCE] = p("i_induce") - id_conflict
+    out[PRED_I_CONTRA] = p("i_contra") - id_conflict
+
+    # ---- gene↔gene de-conflict (extract_target.py:453-486): associate
+    # loses pairs present in EITHER direction in covary/regulate, then
+    # mutual associate pairs collapse
+    directional = p("gg_reg") | p("gg_cov")
+    kill = directional | {(b, a) for a, b in directional}
+    out[PRED_GG_ASSOC] = _one_way(p("gg_assoc") - kill)
+
+    # ---- disease→gene (extract_target.py:597-601): assoc − up − down
+    out[PRED_DG_ASSOC] = p("dg_assoc") - p("dg_up") - p("dg_down")
+
+    return {(s, pred, o, None) for pred, ps in out.items() for s, o in ps}

@@ -1,4 +1,4 @@
-"""Engine utilities: scalable deterministic ranking, salted aggregation."""
+"""Engine utilities: scalable deterministic ranking, distinct counts per group."""
 
 from __future__ import annotations
 
@@ -46,24 +46,6 @@ def stable_rank(df: DataFrame, order_col: str, rank_col: str = "rank",
         )
         .drop("_pid")
     )
-
-
-def salted_group_count(df: DataFrame, group_cols: list[str], out_col: str = "count",
-                       salt_buckets: int = 32) -> DataFrame:
-    """Two-phase (salted) count per group — skew-proof aggregation.
-
-    Plain `groupBy(k).count()` already does map-side partial aggregation in
-    Spark, but aggregations whose partial state is large (collect_list,
-    exact distinct) concentrate hot keys on one reducer. The salt pattern:
-    aggregate per (key, salt) first, then combine per key — the hot key's
-    work spreads over `salt_buckets` reducers. Used where the 甘草-scale
-    hot-entity skew named in BASELINE.json would otherwise serialize.
-    """
-    salted = df.withColumn(
-        "_salt", F.pmod(F.hash(*[F.col(c) for c in df.columns]), F.lit(salt_buckets))
-    )
-    partial = salted.groupBy(*group_cols, "_salt").agg(F.count("*").alias("_pc"))
-    return partial.groupBy(*group_cols).agg(F.sum("_pc").cast("long").alias(out_col))
 
 
 def salted_distinct_count(df: DataFrame, group_cols: list[str], distinct_col: str,

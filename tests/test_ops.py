@@ -69,7 +69,12 @@ def test_group_merge_tolerance_violation(spark):
 
 
 def test_standardize(spark):
-    from tcmkg.functions.standardize import standardize_vocab, surrogate_id, tokenize_against_vocab
+    from tcmkg.functions.standardize import (
+        case_normalize,
+        standardize_vocab,
+        surrogate_id,
+        tokenize_against_vocab,
+    )
 
     df = spark.createDataFrame([("Poisonous and CALM",)], "p string")
     out = df.select(standardize_vocab(F.col("p")).alias("p")).collect()[0]["p"]
@@ -79,6 +84,9 @@ def test_standardize(spark):
     df3 = spark.createDataFrame([("cold and very toxic",)], "p string")
     toks = df3.select(tokenize_against_vocab(F.col("p"), ["toxic", "cold", "warm"]).alias("t")).collect()[0]["t"]
     assert toks == ["toxic", "cold"]
+    df4 = spark.createDataFrame([("tmhb00003", "Cold And TOXIC")], "herb_id string, p string")
+    row = case_normalize(df4).collect()[0]
+    assert (row["herb_id"], row["p"]) == ("TMHB00003", "cold and toxic")
 
 
 def test_embed_deterministic():

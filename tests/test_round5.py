@@ -1,7 +1,25 @@
 """Round-5 additions: derived-entity families (ingredient/target), the
 ingredient→gene de-conflict algebra, and fixture-safety invariants."""
 
+from collections import defaultdict
+
 import pytest
+
+
+def _grouped(spark, rows):
+    """Publish (kind, subj, obj) rows through the shipped grouped fold:
+    rows -> reduced-shaped frame (one row per distinct pair) ->
+    _assemble_grouped -> {pred: {(subj, obj)}}."""
+    from tcmkg.pipeline.triples import _assemble_grouped
+
+    reduced = spark.createDataFrame(
+        [(k, s, o, None, 0, 0) for k, s, o in set(rows)],
+        "kind string, subj string, obj string, amt double, n_null long, n_ml long",
+    )
+    out = defaultdict(set)
+    for r in _assemble_grouped(reduced).collect():
+        out[r["pred"]].add((r["subj"], r["obj"]))
+    return out
 
 
 def test_new_names_substring_free():
@@ -39,11 +57,9 @@ def test_new_names_substring_free():
 
 
 def test_gene_edge_algebra(spark):
-    """gene_edges implements extract_target.py:365-372 + 404-417: up∩down
-    conflicts move to associate; associate loses pairs still held by a
-    directional set. Verified against a direct set-algebra model."""
-    from tcmkg.pipeline.triples import gene_edges
-
+    """The grouped fold implements extract_target.py:365-372 + 404-417:
+    up∩down conflicts move to associate; associate loses pairs still held
+    by a directional set. Verified against a direct set-algebra model."""
     mention = [
         # (kind, subj, obj): plain up / plain down / plain assoc
         ("up_gene", "I1", "G1"), ("down_gene", "I2", "G1"),
@@ -56,13 +72,10 @@ def test_gene_edge_algebra(spark):
         ("up_gene", "I6", "G3"), ("down_gene", "I6", "G3"),
         ("assoc_gene", "I6", "G3"),
     ]
-    pairs = spark.createDataFrame(
-        [(k, s, o) for k, s, o in mention], "kind string, subj string, obj string"
-    ).dropDuplicates(["kind", "subj", "obj"])
-    up, down, assoc, _bind = gene_edges(pairs)
-    got_up = {(r["subj"], r["obj"]) for r in up.collect()}
-    got_down = {(r["subj"], r["obj"]) for r in down.collect()}
-    got_assoc = {(r["subj"], r["obj"]) for r in assoc.collect()}
+    out = _grouped(spark, mention)
+    got_up = out["ingredient_upregulate_gene"]
+    got_down = out["ingredient_downregulate_gene"]
+    got_assoc = out["ingredient_associate_gene"]
 
     # independent set-algebra model
     ups = {(s, o) for k, s, o in mention if k == "up_gene"}
@@ -77,11 +90,9 @@ def test_gene_edge_algebra(spark):
 
 
 def test_ingredient_disease_algebra(spark):
-    """ingredient_disease_edges implements extract_ingredient.py:514-521:
+    """The grouped fold implements extract_ingredient.py:514-521:
     conflict = treats ∩ (induces ∪ contraindicates), dropped from ALL
     sets; induces∩contraindicates WITHOUT treats survives in both."""
-    from tcmkg.pipeline.triples import ingredient_disease_edges
-
     mention = [
         ("i_treat", "I1", "D1"),                             # plain treat
         ("i_induce", "I2", "D1"),                            # plain induce
@@ -90,13 +101,10 @@ def test_ingredient_disease_algebra(spark):
         ("i_treat", "I5", "D2"), ("i_contra", "I5", "D2"),   # conflict: both die
         ("i_induce", "I6", "D3"), ("i_contra", "I6", "D3"),  # both survive
     ]
-    pairs = spark.createDataFrame(
-        mention, "kind string, subj string, obj string"
-    )
-    t, i, c = ingredient_disease_edges(pairs)
-    got_t = {(r["subj"], r["obj"]) for r in t.collect()}
-    got_i = {(r["subj"], r["obj"]) for r in i.collect()}
-    got_c = {(r["subj"], r["obj"]) for r in c.collect()}
+    out = _grouped(spark, mention)
+    got_t = out["ingredient_treat_disease"]
+    got_i = out["ingredient_induce_disease"]
+    got_c = out["ingredient_contraindicate_disease"]
     assert got_t == {("I1", "D1")}
     assert got_i == {("I2", "D1"), ("I6", "D3")}
     assert got_c == {("I3", "D1"), ("I6", "D3")}
@@ -362,12 +370,10 @@ def test_nodes_table_has_derived_types(pipeline):
 
 
 def test_gene_gene_algebra(spark):
-    """gene_gene_edges implements extract_target.py:453-486: associate
+    """The grouped fold implements extract_target.py:453-486: associate
     loses pairs present IN EITHER DIRECTION in covary/regulate; surviving
     mutual associate pairs collapse to the subj<obj direction. Verified
     against a direct set-algebra model."""
-    from tcmkg.pipeline.triples import gene_gene_edges
-
     mention = [
         ("gg_reg", "G1", "G2"),                              # plain regulate
         ("gg_cov", "G3", "G4"),                              # plain covary
@@ -377,13 +383,10 @@ def test_gene_gene_algebra(spark):
         ("gg_assoc", "G4", "G3"),                            # killed: reverse in cov
         ("gg_assoc", "G7", "G8"), ("gg_assoc", "G8", "G7"),  # mutual -> (G7,G8)
     ]
-    pairs = spark.createDataFrame(
-        mention, "kind string, subj string, obj string"
-    ).dropDuplicates(["kind", "subj", "obj"])
-    reg, cov, assoc = gene_gene_edges(pairs)
-    assert {(r["subj"], r["obj"]) for r in reg.collect()} == {("G1", "G2")}
-    assert {(r["subj"], r["obj"]) for r in cov.collect()} == {("G3", "G4")}
-    got = {(r["subj"], r["obj"]) for r in assoc.collect()}
+    out = _grouped(spark, mention)
+    assert out["gene_regulate_gene"] == {("G1", "G2")}
+    assert out["gene_covary_gene"] == {("G3", "G4")}
+    got = out["gene_associate_gene"]
     # independent model
     regs = {("G1", "G2")}
     covs = {("G3", "G4")}
@@ -395,10 +398,8 @@ def test_gene_gene_algebra(spark):
 
 
 def test_disease_gene_algebra(spark):
-    """disease_gene_edges implements extract_target.py:597-601:
+    """The grouped fold implements extract_target.py:597-601:
     associate = assoc − up − down; directional sets pass through."""
-    from tcmkg.pipeline.triples import disease_gene_edges
-
     mention = [
         ("dg_up", "D1", "G1"),
         ("dg_down", "D2", "G1"),
@@ -406,11 +407,10 @@ def test_disease_gene_algebra(spark):
         ("dg_assoc", "D1", "G1"),                         # loses to up
         ("dg_assoc", "D2", "G1"),                         # loses to down
     ]
-    pairs = spark.createDataFrame(mention, "kind string, subj string, obj string")
-    up, down, assoc = disease_gene_edges(pairs)
-    assert {(r["subj"], r["obj"]) for r in up.collect()} == {("D1", "G1")}
-    assert {(r["subj"], r["obj"]) for r in down.collect()} == {("D2", "G1")}
-    assert {(r["subj"], r["obj"]) for r in assoc.collect()} == {("D3", "G1")}
+    out = _grouped(spark, mention)
+    assert out["disease_upregulate_gene"] == {("D1", "G1")}
+    assert out["disease_downregulate_gene"] == {("D2", "G1")}
+    assert out["disease_associate_gene"] == {("D3", "G1")}
 
 
 def test_clause_window_bounds():
@@ -487,11 +487,9 @@ def test_gene_side_statement_extraction(spark, pipeline):
 
 
 def test_gene_edges_bind_algebra(spark):
-    """gene_edges implements extract_target.py:365-372 + 404-411: up∩down
-    conflicts move to associate; associate then loses pairs held by a
-    directional set OR by bind; bind publishes raw."""
-    from tcmkg.pipeline.triples import gene_edges
-
+    """The grouped fold implements extract_target.py:365-372 + 404-411:
+    up∩down conflicts move to associate; associate then loses pairs held
+    by a directional set OR by bind; bind publishes raw."""
     mention = [
         ("up_gene", "I1", "G1"),                              # plain up
         ("bind_gene", "I2", "G1"),                            # plain bind
@@ -500,16 +498,13 @@ def test_gene_edges_bind_algebra(spark):
         ("up_gene", "I4", "G1"), ("down_gene", "I4", "G1"),   # conflict -> assoc
         ("bind_gene", "I5", "G1"), ("up_gene", "I5", "G1"),   # both publish
     ]
-    pairs = spark.createDataFrame(
-        mention, "kind string, subj string, obj string"
-    ).dropDuplicates(["kind", "subj", "obj"])
-    up, down, assoc, bind = gene_edges(pairs)
-    assert {(r["subj"], r["obj"]) for r in up.collect()} == {("I1", "G1"), ("I5", "G1")}
-    assert {(r["subj"], r["obj"]) for r in down.collect()} == set()
-    assert {(r["subj"], r["obj"]) for r in assoc.collect()} == {
+    out = _grouped(spark, mention)
+    assert out["ingredient_upregulate_gene"] == {("I1", "G1"), ("I5", "G1")}
+    assert out["ingredient_downregulate_gene"] == set()
+    assert out["ingredient_associate_gene"] == {
         ("I3", "G1"), ("I4", "G1")
     }
-    assert {(r["subj"], r["obj"]) for r in bind.collect()} == {
+    assert out["ingredient_bind_gene"] == {
         ("I2", "G1"), ("I5", "G1")
     }
 
@@ -572,12 +567,6 @@ def test_resemble_and_interact_algebra(spark):
     """disease_resemble loses pairs in published is_a (either direction,
     extract_disease.py:311-317); ingredient interact/resemble mutual pairs
     collapse to subj<obj (extract_ingredient.py:354-361, 375-383)."""
-    from tcmkg.pipeline.triples import (
-        _collapse_mutual,
-        disease_resemble_edges,
-        is_a_edges,
-    )
-
     mention = [
         ("is_a", "D1", "D2"),                          # published is_a
         ("is_a", "D3", "D4"), ("is_a", "D4", "D3"),    # antisym -> neither published
@@ -586,21 +575,20 @@ def test_resemble_and_interact_algebra(spark):
         ("dis_resemble", "D3", "D4"),                  # SURVIVES: is_a pair died
         ("dis_resemble", "D5", "D6"),                  # plain survivor
     ]
-    pairs = spark.createDataFrame(mention, "kind string, subj string, obj string")
-    isa_f = is_a_edges(pairs)
-    assert {(r["subj"], r["obj"]) for r in isa_f.collect()} == {("D1", "D2")}
-    res = disease_resemble_edges(pairs, isa_f)
-    assert {(r["subj"], r["obj"]) for r in res.collect()} == {
+    out = _grouped(spark, mention)
+    assert out["disease_is_a_disease"] == {("D1", "D2")}
+    assert out["disease_resemble_disease"] == {
         ("D3", "D4"), ("D5", "D6")
     }
 
-    both = spark.createDataFrame(
-        [("x", "I2", "I1"), ("x", "I1", "I2"), ("x", "I3", "I4")],
-        "kind string, subj string, obj string",
-    )
-    kept = {(r["subj"], r["obj"]) for r in _collapse_mutual(
-        both.select("subj", "obj")).collect()}
-    assert kept == {("I1", "I2"), ("I3", "I4")}
+    both = _grouped(spark, [
+        (k, s, o)
+        for k in ("ing_resemble", "ing_interact")
+        for s, o in (("I2", "I1"), ("I1", "I2"), ("I3", "I4"))
+    ])
+    for pred in ("ingredient_resemble_ingredient", "ingredient_associate_ingredient"):
+        kept = both[pred]
+        assert kept == {("I1", "I2"), ("I3", "I4")}
 
 
 def test_resemble_interact_extraction(spark, pipeline):
@@ -793,31 +781,38 @@ def test_k_hop_pred_filters(spark, pipeline, transcripts_df):
     assert got == want and got
 
 
-def test_triples_grouped_matches_joins(spark, pipeline, transcripts_df):
-    """r6 grouped algebra fold: _assemble_grouped (one orientation-tagged
-    collect_set aggregation + row-local boolean emission) must publish
-    EXACTLY the rows of the r5 arm-union formulation (_assemble_joins,
-    whose per-family helpers are the tested spec) on a real extraction —
-    all 47 families, weights included. Also pin an adversarial synthetic
-    pair frame exercising every swap/conflict rule at once."""
-    from pyspark.sql import functions as F
+def test_triples_grouped_matches_oracle(spark, pipeline, transcripts_df):
+    """The shipped grouped fold (_assemble_grouped: one orientation-tagged
+    collect_set aggregation + row-local boolean emission) publishes
+    EXACTLY the oracle's `publish` over the same per-kind pair sets: on a
+    real extraction (every family but the dose-weighted contains) and on
+    an adversarial synthetic mention frame exercising every swap/conflict
+    rule at once, plus NULL-keyed and repeated rows that reduce_mentions
+    must drop and fold."""
+    from tcmkg.oracle.extractor import publish
+    from tcmkg.pipeline.extract import MENTION_SCHEMA
+    from tcmkg.pipeline.triples import _assemble_grouped, reduce_mentions
 
-    from tcmkg.pipeline.triples import (
-        _assemble_grouped,
-        _assemble_joins,
-        reduce_mentions,
-    )
+    def published(reduced):
+        rows = [
+            (r["subj"], r["pred"], r["obj"], r["weight"])
+            for r in _assemble_grouped(reduced).collect()
+            if r["pred"] != "formula_contains_herb"
+        ]
+        assert len(rows) == len(set(rows))
+        return set(rows)
+
+    def by_kind(rows):
+        kinds = defaultdict(set)
+        for k, s, o in rows:
+            if k != "contains" and s is not None and o is not None:
+                kinds[k].add((s, o))
+        return kinds
 
     reduced = reduce_mentions(pipeline.mentions(transcripts_df)).localCheckpoint()
-    a = _assemble_joins(reduced)
-    b = _assemble_grouped(reduced)
-    norm = lambda df: sorted(
-        (r["subj"], r["pred"], r["obj"],
-         None if r["weight"] is None else round(r["weight"], 9))
-        for r in df.collect()
-    )
-    ra, rb = norm(a), norm(b)
-    assert ra == rb and len(ra) > 0
+    real = published(reduced)
+    want = publish(by_kind((r["kind"], r["subj"], r["obj"]) for r in reduced.collect()))
+    assert real == want and len(real) > 0
 
     # synthetic: self-loops, mutual pairs, conflicts, either-direction kills
     rows = [
@@ -838,14 +833,18 @@ def test_triples_grouped_matches_joins(spark, pipeline, transcripts_df):
         ("ing_resemble", "ia", "ib"), ("ing_resemble", "ib", "ia"),
         ("dg_assoc", "d1", "g1"), ("dg_up", "d1", "g1"),         # up beats assoc
         ("h_symptom", "h1", "s1"),                               # plain
+        # NULL keys: dropped before the fold, never co-grouped
+        ("treats", None, "d9"), ("dg_up", "d9", None), ("h_symptom", None, None),
+        # repeated rows: fold to one pair
+        ("treats", "h2", "d1"), ("gg_assoc", "ga", "gb"), ("is_a", "d3", "d4"),
     ]
-    syn = spark.createDataFrame(
-        [(k, s, o, None, 0, 0) for k, s, o in rows],
-        "kind string, subj string, obj string, amt double, n_null long, n_ml long",
-    ).localCheckpoint()
-    sa, sb = norm(_assemble_joins(syn)), norm(_assemble_grouped(syn))
-    assert sa == sb
-    got = {(s, p, o) for s, p, o, _ in sb}
+    mentions = spark.createDataFrame(
+        [(k, s, o, 1, 0.0, 0.0, 0.0, 0, 0, False) for k, s, o in rows],
+        MENTION_SCHEMA,
+    )
+    syn = published(reduce_mentions(mentions).localCheckpoint())
+    assert syn == publish(by_kind(rows))
+    got = {(s, p, o) for s, p, o, _ in syn}
     assert ("h2", "herb_treats_disease", "d1") in got
     assert ("h1", "herb_treats_disease", "d1") not in got
     assert ("i1", "ingredient_associate_gene", "g1") in got
