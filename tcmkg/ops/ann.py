@@ -5,8 +5,9 @@ answer an index must approximate). Scale path: IVF (inverted-file) —
 k-means-cluster the corpus, search only the `nprobe` nearest cells:
 
     build_ivf    deterministic Lloyd's k-means as DataFrame ops (assign =
-                 shuffle-free F.aggregate argmin over a centroid array
-                 literal; update = map-side-combinable groupBy avg)
+                 kernels/vec.assign, a mapInPandas nearest-centroid map
+                 with the centroids in its closure; update = map-side-
+                 combinable groupBy avg)
     ivf_search   query -> nprobe nearest centroids -> brute force within
                  those cells only (a broadcast-join + window top-k)
 
@@ -14,70 +15,53 @@ With nprobe == n_centroids IVF degenerates to exact brute force (tested);
 recall at small nprobe is the usual IVF trade (tested >= threshold on the
 driver's embeddings table).
 
-All vectors are cast to double and L2-handling is explicit; everything is
-native Spark SQL (F.zip_with/F.aggregate for the dot products) — no Python
-in the search path.
+All vectors are cast to double. Cosine, nearest-centroid and the in-memory
+math come from kernels/vec.py; a degenerate vector (NULL, zero norm) has a
+NULL cosine, which loses every top-k and probe ranking and sends it to
+the first centroid on assignment.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _dot(a, b):
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x)
-
-
-def _norm(a):
-    return F.sqrt(_dot(a, a))
-
-
-def _cos(dot, na, nb):
-    """ANSI-safe cosine: zero-norm vectors yield NULL (Spark 4's ANSI mode
-    makes 0/0 a SparkArithmeticException, not NaN). NULL compares false
-    everywhere, so degenerate vectors lose every argmin/top-k comparison
-    instead of crashing the job."""
-    return F.try_divide(dot, na * nb)
+from ..kernels import vec
 
 
 def _as_double(col):
     return F.transform(col, lambda x: x.cast("double"))
 
 
-def _argmin_cid(cent_list: list[tuple[int, list[float]]]):
-    """Column: cid of the nearest (cosine) centroid, as a shuffle-free
-    F.aggregate fold over a centroid array LITERAL. Ties keep the lowest
-    cid (the list is cid-ascending and the fold compares strictly).
-    Expects columns `v` (array<double>) and `v_norm` (its L2 norm).
-
-    Zero-norm vectors make every distance NULL (_cos's try_divide; raw
-    division would be an ANSI-mode error); NULL comparisons are false, so
-    the accumulator never advances — seed it with the FIRST centroid so
-    degenerate vectors land in a real cell instead of an unreachable
-    cid."""
-    cent_arr = F.array(
-        *[
-            F.struct(
-                F.lit(int(cid)).alias("cid"),
-                F.array(*[F.lit(float(x)) for x in vec]).alias("cvec"),
-                F.lit(float(sum(x * x for x in vec)) ** 0.5).alias("cnorm"),
-            )
-            for cid, vec in cent_list
-        ]
-    )
-    acc0 = F.struct(
-        F.lit(int(cent_list[0][0])).cast("int").alias("cid"),
-        F.lit(float("inf")).alias("d"),
+def _means(df: DataFrame, keys: list[str], vec_col: str) -> DataFrame:
+    """-> (keys..., cvec): per-key element-wise mean of `vec_col`, one
+    map-side-combinable groupBy(keys, pos) average reassembled in pos
+    order. NULL vectors contribute nothing (posexplode skips them)."""
+    return (
+        df.select(*keys, F.posexplode(vec_col).alias("pos", "x"))
+        .groupBy(*keys, "pos")
+        .agg(F.avg("x").alias("m"))
+        .groupBy(*keys)
+        .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
+        .select(*keys, F.transform("pm", lambda s: s["m"]).alias("cvec"))
     )
 
-    def step(acc, c):
-        d = -_cos(_dot(F.col("v"), c["cvec"]), F.col("v_norm"), c["cnorm"])
-        return F.when(
-            d < acc["d"], F.struct(c["cid"].alias("cid"), d.alias("d"))
-        ).otherwise(acc)
 
-    return F.aggregate(cent_arr, acc0, step)["cid"]
+def _lloyd(S: np.ndarray, k: int, n_iter: int) -> np.ndarray:
+    """Lloyd's k-means over in-memory rows S (cosine assign via
+    vec.nearest), seeded with the first k rows: -> (min(k, len(S)), dim)
+    centroids. A cluster that attracts nothing keeps its previous
+    centroid, so k never shrinks."""
+    C = S[:k].copy()
+    for _ in range(n_iter):
+        a = vec.nearest(S, C)
+        for c in range(len(C)):
+            members = S[a == c]
+            if len(members):
+                C[c] = members.mean(axis=0)
+    return C
 
 
 def build_ivf(
@@ -92,32 +76,22 @@ def build_ivf(
 
     Deterministic init: centroids = vectors of the n smallest ids. Each
     Lloyd round is ONE map-side-combinable groupBy-avg; the assign step is
-    a pure map (F.aggregate argmin over the centroid literal — no
-    crossJoin, no window, no Exchange). Centroids round-trip through the
-    driver each round: k vectors, the same tiny payload a broadcast would
-    ship, but without a per-round shuffle to argmin them.
+    a pure map (vec.assign — no crossJoin, no window, no Exchange).
+    Centroids round-trip through the driver each round: k vectors, the
+    same tiny payload a broadcast would ship, but without a per-round
+    shuffle to argmin them.
 
-    Scale note: the literal holds k*dim scalars — fine through k in the
-    thousands at typical dims. At the k ~ 10^5-10^6 a trillion-vector
+    Scale note: the kernel closure holds k*dim scalars — fine through k in
+    the thousands at typical dims. At the k ~ 10^5-10^6 a trillion-vector
     corpus wants, use build_ivf2 (hierarchical: sample-based coarse cells +
-    one joint broadcast-join sub-kmeans — no k-sized literal anywhere)."""
-    base = emb.select(
-        F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v")
-    ).withColumn("v_norm", _norm(F.col("v")))
+    one joint sub-kmeans, each row scoring only its own cell's
+    sub-centroids)."""
+    base = emb.select(F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v"))
     base = base.localCheckpoint()  # iterated below; truncate lineage once
     seed_rows = base.orderBy("id").limit(n_centroids).collect()  # tiny: k vectors
     cent_list = [(i, list(r["v"])) for i, r in enumerate(seed_rows)]
     for _ in range(n_iter):
-        assign = base.withColumn("cid", _argmin_cid(cent_list))
-        new_cent = (
-            assign.select("cid", F.posexplode("v").alias("pos", "x"))
-            .groupBy("cid", "pos")
-            .agg(F.avg("x").alias("m"))
-            .groupBy("cid")
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
-            .select("cid", F.transform("pm", lambda s: s["m"]).alias("cvec"))
-            .collect()  # k rows
-        )
+        new_cent = _means(vec.assign(base, "v", cent_list, "cid"), ["cid"], "v").collect()
         # a centroid that attracted no vectors this round vanishes from the
         # groupBy result; keep its previous position instead of silently
         # shrinking k (callers size nprobe/recall against n_centroids)
@@ -125,49 +99,11 @@ def build_ivf(
         cent_list = sorted(
             (cid, updated.get(cid, prev)) for cid, prev in cent_list
         )
-    assignments = base.withColumn("cid", _argmin_cid(cent_list)).select("id", "cid")
+    assignments = vec.assign(base, "v", cent_list, "cid").select("id", "cid")
     cent = emb.sparkSession.createDataFrame(
         cent_list, "cid int, cvec array<double>"
     )
     return cent, assignments
-
-
-def _argmin_sub(subs):
-    """Column: scid of the nearest sub-centroid, folding over an array
-    COLUMN of struct<scid,cvec,cnorm> (vs _argmin_cid's literal) — the
-    two-level assign step. Same semantics: strict < keeps the lowest scid on
-    ties (arrays are scid-ascending), NULL distances (zero-norm vectors)
-    never advance the accumulator so the seed (first sub-centroid) wins."""
-    acc0 = F.struct(
-        F.element_at(subs, 1)["scid"].alias("scid"), F.lit(float("inf")).alias("d")
-    )
-
-    def step(acc, c):
-        d = -_cos(_dot(F.col("v"), c["cvec"]), F.col("v_norm"), c["cnorm"])
-        return F.when(
-            d < acc["d"], F.struct(c["scid"].alias("scid"), d.alias("d"))
-        ).otherwise(acc)
-
-    return F.aggregate(subs, acc0, step)["scid"]
-
-
-def _subs_df(spark, sub: dict[int, list[list[float]]]) -> DataFrame:
-    """sub: cid -> scid-ordered sub-centroid vectors, as the broadcastable
-    (cid, subs) side of the joint sub-assign join."""
-    rows = [
-        (
-            cid,
-            [
-                (scid, vec, float(sum(x * x for x in vec)) ** 0.5)
-                for scid, vec in enumerate(vecs)
-            ],
-        )
-        for cid, vecs in sorted(sub.items())
-    ]
-    return spark.createDataFrame(
-        rows,
-        "cid int, subs array<struct<scid:int, cvec:array<double>, cnorm:double>>",
-    )
 
 
 def build_ivf2(
@@ -180,110 +116,80 @@ def build_ivf2(
     sample_size: int = 512,
 ) -> tuple[DataFrame, DataFrame]:
     """Two-level (hierarchical) IVF build — the k ~ 10^5+ path build_ivf's
-    scale note names. Effective k = n_coarse * n_sub cells WITHOUT a k-sized
-    expression literal anywhere:
+    scale note names. Effective k = n_coarse * n_sub cells, yet no row
+    scores more than n_coarse + n_sub centroids:
 
-      level 1  coarse k-means on a deterministic sample (the n smallest
-               ids), run driver-side in numpy — the sample is tiny by
-               construction, and the resulting n_coarse centroids are small
-               enough for _argmin_cid's literal fold (map-only, no Exchange).
+      level 1  coarse k-means (_lloyd) on a deterministic sample (the n
+               smallest ids), run driver-side in numpy — the sample is tiny
+               by construction.
       level 2  ONE JOINT sub-kmeans across all coarse cells: each Lloyd
-               round assigns via broadcast-join (cid -> that cell's
-               sub-centroid array) + an F.aggregate argmin fold over the
-               joined array column, then updates with a single map-side-
-               combinable groupBy(cid, scid) average. Cost per round is
-               independent of the number of cells; the fact table is never
-               hash-shuffled (BroadcastExchange only — asserted in tests).
+               round assigns with vec.assign keyed by the row's coarse cid
+               (the cid -> sub-centroids map rides in the kernel closure),
+               then updates with a single map-side-combinable
+               groupBy(cid, scid) average. Cost per round is independent
+               of the number of cells; the fact table is never
+               hash-shuffled (asserted in tests).
 
-    The broadcast payload is the index itself (n_coarse*n_sub vectors) —
-    the same thing ivf_search must broadcast anyway, so memory is not a new
+    The closure holds the index itself (n_coarse*n_sub vectors) — the same
+    thing ivf_search must broadcast anyway, so memory is not a new
     constraint. Empty (cid, scid) cells keep their previous centroid (no
     silent k shrink, same rule as build_ivf).
 
     -> (centroids(cid, scid, gid, cvec), assignments(id, cid, scid, gid))
     with gid = cid * n_sub + scid, the flat cell id ivf_search consumes via
     flatten_ivf2."""
-    import numpy as np
-
-    base = emb.select(
-        F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v")
-    ).withColumn("v_norm", _norm(F.col("v")))
+    base = emb.select(F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v"))
     base = base.localCheckpoint()
 
-    samp = base.orderBy("id").limit(sample_size).collect()
-    S = np.array([list(r["v"]) for r in samp], dtype=float)
-
-    def _cos_sims(X, C):
-        xn = np.linalg.norm(X, axis=1, keepdims=True)
-        cn = np.linalg.norm(C, axis=1, keepdims=True)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            sims = (X @ C.T) / (xn * cn.T)
-        # zero-norm rows: no signal -> first centroid (the fold's seed rule)
-        return np.nan_to_num(sims, nan=-np.inf)
-
-    k1 = min(n_coarse, len(S))
-    C = S[:k1].copy()
-    for _ in range(n_iter):
-        a = np.argmax(_cos_sims(S, C), axis=1)  # first max = lowest cid, as the fold
-        for c in range(k1):
-            members = S[a == c]
-            if len(members):
-                C[c] = members.mean(axis=0)
+    samp = base.filter(F.col("v").isNotNull()).orderBy("id").limit(sample_size).toPandas()["v"]
+    S, bad = vec.stack(samp, len(samp.iloc[0]))
+    S = S[~bad]
+    C = _lloyd(S, n_coarse, n_iter)
+    k1 = len(C)
     coarse_list = [(i, [float(x) for x in C[i]]) for i in range(k1)]
 
     # sub-init from the sample: per cell, its first n_sub distinct member
     # vectors (id order); short cells pad with the coarse centroid — a
     # duplicate seed attracts nothing and the keep-previous rule retains it,
     # so every cell keeps exactly n_sub sub-centroids
-    a = np.argmax(_cos_sims(S, C), axis=1)
+    a = vec.nearest(S, C)
     sub: dict[int, list[list[float]]] = {}
     for c in range(k1):
         seen, picks = set(), []
-        for vec in S[a == c]:
-            t = tuple(vec)
+        for v in S[a == c]:
+            t = tuple(v)
             if t not in seen:
                 seen.add(t)
-                picks.append([float(x) for x in vec])
+                picks.append([float(x) for x in v])
             if len(picks) >= n_sub:
                 break
         while len(picks) < n_sub:
             picks.append([float(x) for x in C[c]])
         sub[c] = picks
 
-    spark = emb.sparkSession
-    coarse_assigned = base.withColumn("cid", _argmin_cid(coarse_list))
+    coarse_assigned = vec.assign(base, "v", coarse_list, "cid")
+
+    def sub_assign():
+        tables = {c: list(enumerate(vecs)) for c, vecs in sub.items()}
+        return vec.assign(coarse_assigned, "v", tables, "scid", key_col="cid")
+
     for _ in range(n_iter):
-        assigned = coarse_assigned.join(F.broadcast(_subs_df(spark, sub)), "cid").withColumn(
-            "scid", _argmin_sub(F.col("subs"))
-        )
-        new_sub = (
-            assigned.select("cid", "scid", F.posexplode("v").alias("pos", "x"))
-            .groupBy("cid", "scid", "pos")
-            .agg(F.avg("x").alias("m"))
-            .groupBy("cid", "scid")
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
-            .select("cid", "scid", F.transform("pm", lambda s: s["m"]).alias("cvec"))
-            .collect()  # k1*k2 rows — the index size, small by definition
-        )
+        new_sub = _means(sub_assign(), ["cid", "scid"], "v").collect()  # k1*k2 rows
         updated = {(r["cid"], r["scid"]): list(r["cvec"]) for r in new_sub}
         sub = {
             c: [updated.get((c, s), prev) for s, prev in enumerate(vecs)]
             for c, vecs in sub.items()
         }
 
-    assignments = (
-        coarse_assigned.join(F.broadcast(_subs_df(spark, sub)), "cid")
-        .withColumn("scid", _argmin_sub(F.col("subs")))
-        .select(
-            "id", "cid", "scid",
-            (F.col("cid") * n_sub + F.col("scid")).cast("int").alias("gid"),
-        )
+    assignments = sub_assign().select(
+        "id", "cid", "scid",
+        (F.col("cid") * n_sub + F.col("scid")).cast("int").alias("gid"),
     )
-    centroids = spark.createDataFrame(
+    centroids = emb.sparkSession.createDataFrame(
         [
-            (c, s, c * n_sub + s, vec)
+            (c, s, c * n_sub + s, v)
             for c, vecs in sorted(sub.items())
-            for s, vec in enumerate(vecs)
+            for s, v in enumerate(vecs)
         ],
         "cid int, scid int, gid int, cvec array<double>",
     )
@@ -298,6 +204,43 @@ def flatten_ivf2(
     return (
         centroids.select(F.col("gid").alias("cid"), "cvec"),
         assignments.select("id", F.col("gid").alias("cid")),
+    )
+
+
+def _nearest_cells(pairs: DataFrame, cell_col: str, n: int) -> DataFrame:
+    """Query x centroid rows (qid, qv, cvec, cell_col, ...) -> the n rows
+    per query whose cvec has the highest cosine to qv, cvec dropped. NULL
+    cosines (zero-norm centroid or query) rank LAST — Spark's ascending
+    default would rank them first and hand every probe slot to a
+    degenerate cell; ties go to the lowest cell id."""
+    w = Window.partitionBy("qid").orderBy(
+        F.col("_cos").desc_nulls_last(), F.col(cell_col)
+    )
+    return (
+        pairs.withColumn("_cos", vec.cosine_udf("qv", "cvec"))
+        .withColumn("_rk", F.row_number().over(w))
+        .filter(F.col("_rk") <= n)
+        .drop("_cos", "_rk", "cvec")
+    )
+
+
+def _scan_cells(
+    probe: DataFrame, assignments: DataFrame, emb: DataFrame,
+    id_col: str, vec_col: str, cell_col: str, topk: int,
+) -> DataFrame:
+    """Cell-pruned brute force: each (qid, qv, cell) probe row pairs only
+    with the corpus vectors assigned to that cell -> (qid, rk, neighbor)
+    cosine top-k, ties -> lowest id, NULL cosines last."""
+    base = emb.select(F.col(id_col).alias("nid"), _as_double(F.col(vec_col)).alias("nv"))
+    cand = probe.join(
+        assignments.select(F.col("id").alias("nid"), cell_col), cell_col
+    ).join(base, "nid")
+    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("nid"))
+    return (
+        cand.withColumn("cos", vec.cosine_udf("qv", "nv"))
+        .withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= topk)
+        .select("qid", F.col("rk").cast("long").alias("rk"), F.col("nid").alias("neighbor"))
     )
 
 
@@ -321,53 +264,14 @@ def ivf2_search(
     between scoring ~10^5 and ~10^2 centroids per query. Candidate scan is
     then the usual cell-pruned join. With n_coarse_probe and nprobe covering
     every cell this degenerates to exact brute force (tested)."""
-    coarse = (
-        centroids.select("cid", F.posexplode("cvec").alias("pos", "x"))
-        .groupBy("cid", "pos")
-        .agg(F.avg("x").alias("m"))
-        .groupBy("cid")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
-        .select("cid", F.transform("pm", lambda s: s["m"]).alias("ccvec"))
+    coarse = _means(centroids, ["cid"], "cvec")
+    probe_c = _nearest_cells(
+        queries.crossJoin(F.broadcast(coarse)), "cid", n_coarse_probe
     )
-    # query norm staged ONCE (r6) — reused across both probe levels and the
-    # candidate scoring instead of re-evaluating the O(dim) fold per row;
-    # corpus-vector norms staged in the base projection likewise
-    qn = queries.withColumn("qnorm", _norm(F.col("qv")))
-    qc = qn.crossJoin(F.broadcast(coarse)).withColumn(
-        "cdist",
-        -_cos(_dot(F.col("qv"), F.col("ccvec")), F.col("qnorm"), _norm(F.col("ccvec"))),
+    probe = _nearest_cells(
+        probe_c.join(F.broadcast(centroids), "cid"), "gid", nprobe
     )
-    # asc_nulls_last on both probe windows: NULL (zero-norm) loses
-    wq = Window.partitionBy("qid").orderBy(F.col("cdist").asc_nulls_last(), F.col("cid"))
-    probe_c = (
-        qc.withColumn("crk", F.row_number().over(wq))
-        .filter(F.col("crk") <= n_coarse_probe)
-        .select("qid", "qv", "qnorm", "cid")
-    )
-    qs = probe_c.join(F.broadcast(centroids), "cid").withColumn(
-        "sdist",
-        -_cos(_dot(F.col("qv"), F.col("cvec")), F.col("qnorm"), _norm(F.col("cvec"))),
-    )
-    ws = Window.partitionBy("qid").orderBy(F.col("sdist").asc_nulls_last(), F.col("gid"))
-    probe = (
-        qs.withColumn("srk", F.row_number().over(ws))
-        .filter(F.col("srk") <= nprobe)
-        .select("qid", "qv", "qnorm", "gid")
-    )
-    base = emb.select(
-        F.col(id_col).alias("nid"), _as_double(F.col(vec_col)).alias("nv")
-    ).withColumn("nnorm", _norm(F.col("nv")))
-    cand = probe.join(assignments.withColumnRenamed("id", "nid").select("nid", "gid"), "gid")
-    cand = cand.join(base, "nid")
-    scored = cand.withColumn(
-        "cos", _cos(_dot(F.col("qv"), F.col("nv")), F.col("qnorm"), F.col("nnorm"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("nid"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= topk)
-        .select("qid", F.col("rk").cast("long").alias("rk"), F.col("nid").alias("neighbor"))
-    )
+    return _scan_cells(probe, assignments, emb, id_col, vec_col, "gid", topk)
 
 
 def save_ivf(store, centroids: DataFrame, assignments: DataFrame, prefix: str = "ivf") -> None:
@@ -403,40 +307,8 @@ def ivf_search(
     only with vectors assigned to its nprobe nearest centroids — at 10^12
     vectors that is the difference between scanning the corpus per query
     and scanning corpus/n_centroids*nprobe."""
-    # stage the query norm as a column ONCE (r6): the scoring expression
-    # below otherwise recomputes _norm(qv) — an O(dim) interpreted fold —
-    # per CANDIDATE row instead of per query (same staging the brute-force
-    # q_ann_topk got in bf5fd36); likewise the corpus-vector norm is
-    # computed once per base row in the projection, not per scored pair
-    qn = queries.withColumn("qnorm", _norm(F.col("qv")))
-    qc = qn.crossJoin(F.broadcast(centroids)).withColumn(
-        "dist", -_cos(_dot(F.col("qv"), F.col("cvec")), F.col("qnorm"), _norm(F.col("cvec")))
-    )
-    # asc_nulls_LAST: zero-norm vectors yield NULL cosine and must LOSE
-    # (module convention above); Spark's ascending default is NULLS FIRST,
-    # which would rank a degenerate centroid as every query's #1 probe
-    wq = Window.partitionBy("qid").orderBy(
-        F.col("dist").asc_nulls_last(), F.col("cid")
-    )
-    probe = (
-        qc.withColumn("rk", F.row_number().over(wq))
-        .filter(F.col("rk") <= nprobe)
-        .select("qid", "qv", "qnorm", "cid")
-    )
-    base = emb.select(
-        F.col(id_col).alias("nid"), _as_double(F.col(vec_col)).alias("nv")
-    ).withColumn("nnorm", _norm(F.col("nv")))
-    cand = probe.join(assignments.withColumnRenamed("id", "nid"), "cid")
-    cand = cand.join(base, "nid")
-    scored = cand.withColumn(
-        "cos", _cos(_dot(F.col("qv"), F.col("nv")), F.col("qnorm"), F.col("nnorm"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("nid"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= topk)
-        .select("qid", F.col("rk").cast("long").alias("rk"), F.col("nid").alias("neighbor"))
-    )
+    probe = _nearest_cells(queries.crossJoin(F.broadcast(centroids)), "cid", nprobe)
+    return _scan_cells(probe, assignments, emb, id_col, vec_col, "cid", topk)
 
 
 def ivf_add(
@@ -456,14 +328,17 @@ def ivf_add(
     full corpus is a once-per-epoch event, not a per-tranche one.
 
       assign  each new vector goes to its nearest EXISTING centroid — the
-              same pure argmin build/search use, so added assignments are
+              same vec.assign build/search use, so added assignments are
               byte-identical to assigning the grown corpus from scratch
               against the same centroids (tested).
-      split   any cell whose population now exceeds `max_cell` is re-split
-              LOCALLY: a sub-kmeans (build_ivf, k=n_subsplit) over just
-              that cell's members replaces its centroid with fresh-cid
-              sub-centroids and reassigns only those members. Per-tranche
-              work is O(new) + O(oversized cells), never O(corpus).
+      split   every cell whose population now exceeds `max_cell` is
+              re-split LOCALLY, all in ONE groupBy(cid).applyInPandas job:
+              a numpy sub-kmeans (_lloyd, k=n_subsplit, seeded with the
+              cell's smallest ids) over just that cell's members replaces
+              its centroid with fresh-cid sub-centroids (sequential, in
+              old-cid order), and only those members are reassigned.
+              Per-tranche work is O(new) + O(oversized cells), never
+              O(corpus); a cell's members must fit one Python worker.
 
     `emb` is the GROWN corpus (old ∪ new) — the index stores (id, cid)
     only; vectors are looked up from the corpus table for the member sets
@@ -477,9 +352,7 @@ def ivf_add(
     cent_rows = sorted(
         ((r["cid"], list(r["cvec"])) for r in centroids.collect())
     )
-    base_new = new_emb.select(
-        F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v")
-    ).withColumn("v_norm", _norm(F.col("v")))
+    base_new = new_emb.select(F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v"))
     # id-disjointness guard: an id already in the index would end up
     # assigned twice (every subsequent search returning it twice and every
     # re-split double-counting it) — a silent corruption, so ValueError.
@@ -492,69 +365,61 @@ def ivf_add(
             f"ivf_add: {n_dup} new ids are already assigned in the index "
             "— tranche ids must be disjoint from the indexed corpus"
         )
-    new_assign = base_new.withColumn("cid", _argmin_cid(cent_rows)).select("id", "cid")
-    all_assign = assignments.unionByName(new_assign)
+    new_assign = vec.assign(base_new, "v", cent_rows, "cid").select("id", "cid")
+    # the updated assignments still READ (lazily) from the store stage the
+    # save below is about to OVERWRITE — materialize first or the writer
+    # deletes its own input mid-scan (the split reads only this frame and
+    # `emb`). localCheckpoint is eager and holds only (id, cid) rows; a
+    # production deployment would instead write a new index snapshot
+    # version and flip a pointer (same reason).
+    all_assign = assignments.unionByName(new_assign).localCheckpoint()
 
     if max_cell is not None:
-        oversized = [
-            r["cid"]
-            for r in all_assign.groupBy("cid").count()
-            .filter(F.col("count") > max_cell).collect()
-        ]
-        if oversized:
-            all_assign = all_assign.persist()
+        dim = len(cent_rows[0][1])
+        oversized = (
+            all_assign.groupBy("cid").count()
+            .filter(F.col("count") > max_cell).select("cid")
+        )
+        members = all_assign.join(oversized, "cid").join(
+            emb.select(F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v")),
+            "id",
+        )
+
+        def split(pdf):
+            S, bad = vec.stack(pdf.sort_values("id")["v"], dim)
+            C = _lloyd(S[~bad], n_subsplit, n_iter)
+            return pd.DataFrame({
+                "cid": int(pdf["cid"].iloc[0]),
+                "scid": range(len(C)),
+                "cvec": list(C),
+            })
+
+        subs = sorted(
+            (r["cid"], r["scid"], list(r["cvec"]))
+            for r in members.select("cid", "id", "v").groupBy("cid").applyInPandas(
+                split, "cid int, scid int, cvec array<double>"
+            ).collect()  # n_subsplit rows per oversized cell
+        )
+        if subs:
+            # retire each split cid; its sub-cells get fresh sequential cids
             next_cid = max(cid for cid, _ in cent_rows) + 1
-            cent_map = dict(cent_rows)
-            keep_assign = all_assign.filter(~F.col("cid").isin(oversized))
-            new_parts = [keep_assign]
-            for c in sorted(oversized):
-                members = (
-                    all_assign.filter(F.col("cid") == c)
-                    .select("id")
-                    .join(
-                        emb.select(
-                            F.col(id_col).alias("id"), F.col(vec_col).alias("v")
-                        ),
-                        "id",
-                    )
-                )
-                sub_cent, sub_assign = build_ivf(
-                    members, "id", "v", n_centroids=n_subsplit, n_iter=n_iter
-                )
-                # retire cid c; sub-cells get fresh sequential cids.
-                # Collect ONCE (r6): the second .collect() re-executed the
-                # whole sub-kmeans assignment job per oversized cell.
-                sub_rows = sorted(sub_cent.collect(), key=lambda r: r["cid"])
-                remap = {
-                    r["cid"]: next_cid + i for i, r in enumerate(sub_rows)
-                }
-                for r in sub_rows:
-                    cent_map[remap[r["cid"]]] = list(r["cvec"])
-                del cent_map[c]
-                next_cid += len(remap)
-                mapping = F.create_map(
-                    *[F.lit(x) for kv in remap.items() for x in kv]
-                )
-                new_parts.append(
-                    sub_assign.select(
-                        "id", mapping[F.col("cid")].cast("int").alias("cid")
-                    )
-                )
-            out_assign = new_parts[0]
-            for p in new_parts[1:]:
-                out_assign = out_assign.unionByName(p)
-            cent_rows = sorted(cent_map.items())
-            all_assign = out_assign
+            tables: dict[int, list] = {}
+            for i, (c, _, v) in enumerate(subs):
+                tables.setdefault(c, []).append((next_cid + i, v))
+            split_assign = vec.assign(
+                members.select("id", "cid", "v"), "v", tables, "new_cid", key_col="cid"
+            ).select("id", F.col("new_cid").alias("cid"))
+            all_assign = all_assign.filter(
+                ~F.col("cid").isin(list(tables))
+            ).unionByName(split_assign)
+            cent_rows = sorted(
+                [(c, v) for c, v in cent_rows if c not in tables]
+                + [r for rows in tables.values() for r in rows]
+            )
 
     new_centroids = spark.createDataFrame(
         [(int(c), [float(x) for x in v]) for c, v in cent_rows],
         "cid int, cvec array<double>",
     )
-    # the updated assignments still READ (lazily) from the store stage this
-    # save is about to OVERWRITE — materialize first or the writer deletes
-    # its own input mid-scan. localCheckpoint is eager and holds only
-    # (id, cid) rows; a production deployment would instead write a new
-    # index snapshot version and flip a pointer (same reason).
-    all_assign = all_assign.localCheckpoint()
     save_ivf(store, new_centroids, all_assign, prefix)
     return load_ivf(spark, store, prefix)

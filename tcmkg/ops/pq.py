@@ -16,7 +16,7 @@ oracle pattern):
   - subspace s covers dims [s*d/m, (s+1)*d/m); d must divide by m
   - seeds: the subvectors of the k smallest ids
   - each round: squared-L2 argmin assignment (ties -> lowest code;
-    the fold's strict < keeps the seed), per-dim mean update ROUNDED to
+    the first minimum wins), per-dim mean update ROUNDED to
     6dp (both engines' round() land on the same double, so cross-engine
     sum-order drift ~1e-15 dies nine orders below the quantum), empty
     codes keep their previous centroid (k never silently shrinks)
@@ -34,77 +34,46 @@ reduces with one combinable groupBy — nothing is proportional to
 corpus x corpus, and the big side is never hash-shuffled except the
 final per-(query, doc) sum.
 
-r6: the argmin maps (train assignment + encode) run as numpy kernels
-(_codes_batch) instead of higher-order-function SQL expressions. Same
-map shape, same doubles (the kernel accumulates distances in the fold's
-exact addition order); the HOF form evaluated interpreted per element
-and, worse, the optimizer duplicated the open expression into
-generate-inferred and join-key filters on the search path. Measured:
-q_ann_pq 12.4s -> 2.2s at sf1.0 (local[32]).
+r6: the argmin maps (train assignment + encode) became numpy kernels
+instead of higher-order-function SQL expressions: the HOF form evaluated
+interpreted per element and, worse, the optimizer duplicated the open
+expression into generate-inferred and join-key filters on the search
+path. Measured: q_ann_pq 12.4s -> 2.2s at sf1.0 (local[32]). Every
+squared distance — codes and the query LUT — is kernels/vec.sq_l2, which
+accumulates in index order, the oracle's addition order.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .ann import _as_double
+from ..kernels import vec
+from .ann import _as_double, _nearest_cells
 
 
 def _codes_batch(V, books_np):
-    """V: (n, dim) float64 -> (n, m) int32 argmin codes, bit-faithful to
-    the reference fold: the squared-distance accumulation loops the
-    subspace dims IN INDEX ORDER (D starts at 0.0 and adds one (x-c)^2
-    term per dim — the exact addition sequence of the former
-    zip_with/F.aggregate fold and of the oracle's list-comprehension
-    sum), and np.argmin returns the FIRST minimum, i.e. the lowest code
-    on exact ties — the oracle's min(code) over min-distance rows.
+    """V: (n, dim) float64 -> (n, m) int32 argmin codes: per subspace, the
+    vec.sq_l2 distance to every code (index-order accumulation, the
+    oracle's list-comprehension sum), and np.argmin's FIRST minimum, i.e.
+    the lowest code on exact ties — the oracle's min(code) over
+    min-distance rows.
 
-    Why a numpy kernel and not JVM expressions: the HOF fold evaluates
+    Why a numpy kernel and not JVM expressions: the HOF fold evaluated
     interpreted per element (the 77KB codes projection dominated the PQ
     plans, plans/r06), and a flat-arithmetic rewrite was worse — the
     optimizer duplicates such open expressions into generate-inferred /
     join-key filters (isnotnull(code), size(codes)>0), which re-evaluate
     the full m*k distance tree per row interpreted (measured 132s at
     sf0.01). An opaque kernel is both fast and pushdown-proof."""
-    import numpy as np
-
-    n = V.shape[0]
-    m = len(books_np)
     dsub = books_np[0].shape[1]
-    out = np.zeros((n, m), dtype=np.int32)
-    for s in range(m):
+    out = np.zeros((V.shape[0], len(books_np)), dtype=np.int32)
+    for s, C in enumerate(books_np):
         sub = V[:, s * dsub : (s + 1) * dsub]
-        C = books_np[s]  # (k, dsub)
-        D = np.zeros((n, C.shape[0]))
-        for j in range(dsub):
-            t = sub[:, j : j + 1] - C[None, :, j]
-            D += t * t
-        out[:, s] = np.argmin(D, axis=1)
+        out[:, s] = np.argmin(vec.sq_l2(sub[:, None, :], C[None, :, :]), axis=1)
     return out
-
-
-def _stack_vectors(vs, dim: int):
-    """pandas Series of array cells -> ((n, dim) float64, bool null mask).
-    A NULL vector (or one shorter than dim, whose element_at would read
-    NULL) is masked: the old fold gave such rows code 0 in every
-    subspace (NULL distances never advance the accumulator)."""
-    import numpy as np
-
-    null = np.fromiter(
-        (v is None or len(v) < dim for v in vs), dtype=bool, count=len(vs)
-    )
-    if null.any():
-        rows = [
-            np.zeros(dim) if bad else np.asarray(v[:dim], dtype=np.float64)
-            for v, bad in zip(vs, null)
-        ]
-        return np.stack(rows) if rows else np.zeros((0, dim)), null
-    return np.stack(vs.values).astype(np.float64, copy=False), null
-
-
-def _subviews(v, m: int, dsub: int) -> list:
-    return [F.slice(v, s * dsub + 1, dsub) for s in range(m)]
 
 
 def _book_df(spark, books: list[list[list[float]]]) -> DataFrame:
@@ -123,21 +92,28 @@ def _query_lut(
 ) -> DataFrame:
     """-> (qid, s, code, pd): the per-query ADC lookup table — built ONCE
     per query (queries x m x k rows), independent of how many cells or
-    candidates that query later probes."""
-    m = len(books)
-    dsub = len(books[0][0])
-    qv = _as_double(F.col(qvec_col))
-    qsub = queries.select(
-        F.col(qid_col).alias("qid"),
-        F.posexplode(F.array(*_subviews(qv, m, dsub))).alias("s", "qsv"),
-    )
-    return qsub.join(F.broadcast(_book_df(queries.sparkSession, books)), "s").select(
-        "qid", "s", "code",
-        F.aggregate(
-            F.zip_with("qsv", "cvec", lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias("pd"),
+    candidates that query later probes. One mapInPandas with the codebook
+    in its closure: vec.sq_l2 from each query subvector to every code. An
+    invalid query vector (vec.stack) gets NULL entries."""
+    m, k, dsub = len(books), len(books[0]), len(books[0][0])
+    qid_type = queries.schema[qid_col].dataType.simpleString()
+
+    def kernel(batches):
+        B = np.asarray(books, dtype=np.float64)  # (m, k, dsub)
+        for pdf in batches:
+            n = len(pdf)
+            Q, bad = vec.stack(pdf[qvec_col], m * dsub)
+            D = vec.sq_l2(Q.reshape(n, m, 1, dsub), B[None])  # (n, m, k)
+            D[bad] = np.nan  # Spark's Arrow writer masks NaN as NULL
+            yield pd.DataFrame({
+                "qid": np.repeat(pdf[qid_col].values, m * k),
+                "s": np.tile(np.repeat(np.arange(m, dtype=np.int32), k), n),
+                "code": np.tile(np.arange(k, dtype=np.int32), n * m),
+                "pd": D.ravel(),
+            })
+
+    return queries.select(qid_col, qvec_col).mapInPandas(
+        kernel, schema=f"qid {qid_type}, s int, code int, pd double"
     )
 
 
@@ -160,20 +136,17 @@ def _adc_topk(probed: DataFrame, lut: DataFrame, on: list[str], topk: int) -> Da
 
 def _assign_frame(base: DataFrame, books: list[list[list[float]]], id_type: str) -> DataFrame:
     """(id, v) -> exploded (id, s, code, sv) assignment rows for one Lloyd
-    round, via the _codes_batch kernel. Rows whose v is NULL/short are
-    dropped: their old sv slices were NULL, which posexplode skipped, so
-    they never reached the centroid-update aggregation anyway."""
+    round, via the _codes_batch kernel. Rows vec.stack marks invalid
+    (NULL, wrong length, NULL element) are dropped: they contribute to no
+    centroid update."""
     m = len(books)
     dsub = len(books[0][0])
     dim = m * dsub
 
     def kernel(batches):
-        import numpy as np
-        import pandas as pd
-
         B = [np.asarray(b, dtype=np.float64) for b in books]
         for pdf in batches:
-            V, null = _stack_vectors(pdf["v"], dim)
+            V, null = vec.stack(pdf["v"], dim)
             keep = ~null
             V = V[keep]
             ids = pdf["id"].values[keep]
@@ -269,7 +242,7 @@ def pq_encode(
     vec_col: str,
 ) -> DataFrame:
     """-> (id, codes array<int>): the compressed corpus — a pure map
-    (respread across cores first: the per-row argmin folds are CPU-bound,
+    (respread across cores first: the per-row argmin kernel is CPU-bound,
     so parallelism must not inherit a small source file count)."""
     m = len(books)
     dim = m * len(books[0][0])
@@ -277,14 +250,11 @@ def pq_encode(
     id_type = emb.schema[id_col].dataType.simpleString()
 
     def kernel(batches):
-        import numpy as np
-        import pandas as pd
-
         B = [np.asarray(b, dtype=np.float64) for b in books]
         for pdf in batches:
-            V, null = _stack_vectors(pdf[vec_col], dim)
+            V, null = vec.stack(pdf[vec_col], dim)
             codes = _codes_batch(V, B)
-            codes[null] = 0  # NULL/short vectors: the fold's code-0 seed
+            codes[null] = 0  # invalid vectors get code 0 in every subspace
             yield pd.DataFrame(
                 {"id": pdf[id_col].values, "codes": list(codes)}
             )
@@ -340,31 +310,12 @@ def ivfpq_search(
     per probed cell — so the corpus-sized code table is never
     hash-shuffled; its only reduction is the per-(query, id) combinable
     sum over candidates, which is corpus/n_cells * nprobe per query."""
-    from .ann import _cos, _dot, _norm
-
     q = queries.select(
         F.col(qid_col).alias("qid"), _as_double(F.col(qvec_col)).alias("qv")
     )
-    # query norm staged once per query row (r6), not re-folded per
-    # (query, centroid) pair in the routing cross join
-    qn = q.withColumn("qnorm", _norm(F.col("qv")))
-    qc = qn.crossJoin(F.broadcast(centroids)).withColumn(
-        "dist",
-        -_cos(_dot(F.col("qv"), F.col("cvec")), F.col("qnorm"),
-              _norm(F.col("cvec"))),
-    )
-    # asc_nulls_LAST: a zero-norm centroid/query yields NULL cosine (the
-    # ANSI-safe convention: degenerate vectors LOSE every comparison);
-    # Spark's default ascending order is NULLS FIRST, which would hand
-    # every probe slot to the degenerate cell instead
-    wq = Window.partitionBy("qid").orderBy(
-        F.col("dist").asc_nulls_last(), F.col("cid")
-    )
-    probe = (
-        qc.withColumn("prk", F.row_number().over(wq))
-        .filter(F.col("prk") <= nprobe)
-        .select("qid", "cid")
-    )
+    probe = _nearest_cells(
+        q.crossJoin(F.broadcast(centroids)), "cid", nprobe
+    ).select("qid", "cid")
     lut = _query_lut(q, books, "qid", "qv")
     cand = codes_with_cell.join(F.broadcast(probe), "cid").select(
         "qid", "id", F.posexplode("codes").alias("s", "code")

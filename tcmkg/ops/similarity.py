@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..kernels import vec
 from ..pipeline.cc import connected_components_edges
 
 EMBED_DIM = 64
@@ -93,26 +94,19 @@ def block_pair_sims(
 ) -> DataFrame:
     """Within-block pairwise cosine pairs above `threshold`.
 
-    applyInPandas per block: the numpy matmul stays quadratic ONLY inside a
-    block (reference blocks by (locus, property) for the same reason —
-    symptom_similarity_using_sentence_embedding.py:70-75). Vectors are
-    assumed L2-normalized (embed_text normalizes)."""
+    applyInPandas per block: the pairwise cosine stays quadratic ONLY
+    inside a block (reference blocks by (locus, property) for the same
+    reason — symptom_similarity_using_sentence_embedding.py:70-75)."""
 
     def per_block(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        if n < 2:
+        pdf = pdf.sort_values(id_col)
+        if len(pdf) < 2:
             return pd.DataFrame({"a": [], "b": [], "sim": []})
-        ids = pdf[id_col].to_numpy()
-        m = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-        sims = m @ m.T
-        iu, ju = np.triu_indices(n, k=1)
-        mask = sims[iu, ju] > threshold
+        a, b, sims = _pair_cos_batch(pdf[id_col].tolist(), _stack(pdf[vec_col]))
+        with np.errstate(invalid="ignore"):
+            keep = sims > threshold
         return pd.DataFrame(
-            {
-                "a": np.minimum(ids[iu[mask]], ids[ju[mask]]),
-                "b": np.maximum(ids[iu[mask]], ids[ju[mask]]),
-                "sim": sims[iu[mask], ju[mask]],
-            }
+            {"a": np.asarray(a)[keep], "b": np.asarray(b)[keep], "sim": sims[keep]}
         )
 
     return (
@@ -131,33 +125,26 @@ def similarity_clusters(pairs: DataFrame) -> DataFrame:
     return connected_components_edges(pairs.select("a", "b"))
 
 
+def _stack(vs: pd.Series) -> np.ndarray:
+    """vec.stack at the first row's length: a row of another length (or
+    with a NULL element) is zero-filled, so its cosines are NaN."""
+    return vec.stack(vs, len(vs.iloc[0]))[0]
+
+
 def _pair_cos_batch(ids_l, M_l, ids_r=None, M_r=None):
-    """Pairwise cosine for one block (or block pair), bit-faithful to the
-    old zip_with/F.aggregate fold: dot and squared-norm accumulate over
-    DIMS IN INDEX ORDER (vectorized across pairs, sequential across
-    dims — the PQ-kernel technique), and a zero denominator yields NaN
-    (the fold's try_divide NULL: both compare false against any
-    threshold). Same-set mode (ids_r None) expects rows SORTED by id and
-    emits the upper triangle (a < b); two-set mode emits min/max-ordered
-    pairs. -> (a_list, b_list, cos_array)."""
+    """Pairwise vec.cosine for one block (or block pair); a zero norm
+    yields NaN, which compares false against any threshold. Same-set mode
+    (ids_r None) expects rows SORTED by id and emits the upper triangle
+    (a < b); two-set mode emits min/max-ordered pairs.
+    -> (a_list, b_list, cos_array)."""
     same = ids_r is None
     if same:
         ids_r, M_r = ids_l, M_l
-    n_l, n_r = len(ids_l), len(ids_r)
-    dot = np.zeros((n_l, n_r))
-    nl = np.zeros(n_l)
-    nr = np.zeros(n_r)
-    for j in range(M_l.shape[1]):
-        dot += M_l[:, j : j + 1] * M_r[None, :, j]
-        nl += M_l[:, j] * M_l[:, j]
-        nr += M_r[:, j] * M_r[:, j]
-    den = np.sqrt(nl)[:, None] * np.sqrt(nr)[None, :]
-    with np.errstate(divide="ignore", invalid="ignore"):
-        cos = np.where(den != 0.0, dot / np.where(den == 0.0, 1.0, den), np.nan)
+    cos = vec.cosine(M_l[:, None, :], M_r[None, :, :])
     if same:
-        iu, ju = np.triu_indices(n_l, k=1)
+        iu, ju = np.triu_indices(len(ids_l), k=1)
         return [ids_l[i] for i in iu], [ids_l[j] for j in ju], cos[iu, ju]
-    iu, ju = np.indices((n_l, n_r))
+    iu, ju = np.indices((len(ids_l), len(ids_r)))
     iu, ju = iu.ravel(), ju.ravel()
     a_out, b_out = [], []
     for i, j in zip(iu, ju):
@@ -185,11 +172,10 @@ def embedding_neardup_pairs(
     trade — recall bounded by cell assignment, verified subset-of-exact in
     tests.
 
-    r6: scoring runs as numpy block kernels instead of a per-pair
-    zip_with/F.aggregate fold — the fold evaluates interpreted per element,
-    so the exact path paid O(pairs * dim) interpreted ops (8.1 s for 2 k
-    vectors at dim 64); the kernel accumulates dims in index order, so
-    cosines are bit-identical (hash-gated by q_cos_neardup). The exact
+    Scoring runs as numpy block kernels (vec.cosine, r6: 8.1 s -> 1.5 s
+    for 2 k vectors at dim 64 against a per-pair interpreted fold); the
+    kernel accumulates dims in index order, so cosines match the oracle's
+    (hash-gated by q_cos_neardup). The exact
     path tiles the pair space into `n_blocks` deterministic hash blocks:
     each vector ships to at most n_blocks+1 block-pair groups (vs once per
     PAIR through the old crossJoin), and each group scores with one
@@ -213,13 +199,12 @@ def embedding_neardup_pairs(
         right = pdf[pdf["_side"] == 1].sort_values("_id")
         if left.empty or (len(left) < 2 and right.empty):
             return empty
-        M_l = np.stack(left["_v"].to_list()).astype(np.float64)
+        M_l = _stack(left["_v"])
         ids_l = left["_id"].tolist()
         if right.empty:
             a, b, cos = _pair_cos_batch(ids_l, M_l)
         else:
-            M_r = np.stack(right["_v"].to_list()).astype(np.float64)
-            a, b, cos = _pair_cos_batch(ids_l, M_l, right["_id"].tolist(), M_r)
+            a, b, cos = _pair_cos_batch(ids_l, M_l, right["_id"].tolist(), _stack(right["_v"]))
         with np.errstate(invalid="ignore"):
             keep = cos >= threshold
         return pd.DataFrame(

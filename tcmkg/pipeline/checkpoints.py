@@ -7,10 +7,9 @@ merge_tcm_symptom.py:143-172). We reproduce that contract as parquet stage
 tables plus a JSON manifest: a stage whose manifest entry exists AND whose
 parquet is readable is skipped on re-run (kill-and-resume safe, idempotent).
 
-On a cluster with Iceberg jars these become Iceberg tables (atomic commits,
-snapshot lineage) — `use_iceberg` switches the writer; the sandbox image has
-no Iceberg runtime, so parquet + atomic manifest rename is the fallback and
-is what the tests exercise.
+Stages are always parquet plus an atomic manifest rename. Iceberg tables
+(atomic commits, snapshot lineage) would replace that pair on a cluster
+with the Iceberg runtime; no Iceberg writer exists here.
 
 A partitioned stage write is rebalanced by its partition columns first
 (the REBALANCE hint): AQE merges small shuffle partitions until each key's
@@ -39,7 +38,6 @@ from pyspark.sql import DataFrame, SparkSession
 @dataclass
 class CheckpointStore:
     root: str
-    use_iceberg: bool = False
     manifest: dict = field(default_factory=dict)
 
     def __post_init__(self) -> None:

@@ -43,7 +43,7 @@ MENTION_SCHEMA = (
 )
 
 
-def ingest(transcripts: DataFrame, num_partitions: int | None = None) -> DataFrame:
+def ingest(transcripts: DataFrame) -> DataFrame:
     """Dedup (conv_id, turn_idx) keeping min (ts, text); add normalized text.
 
     Explicit conv_id hash partitioning up front (the north-rule layout):
@@ -53,10 +53,9 @@ def ingest(transcripts: DataFrame, num_partitions: int | None = None) -> DataFra
     ingest→anchor→prefilter chain runs on ONE shuffle of the fact stream.
     `tnorm` (Q2B+lower) is a codegen'd expression.
     """
-    if num_partitions is None:
-        num_partitions = transcripts.sparkSession.sparkContext.defaultParallelism
+    par = transcripts.sparkSession.sparkContext.defaultParallelism
     slim = transcripts.drop("tool")  # dead column: don't pay shuffle bytes for it
-    parts = slim.repartition(num_partitions, "conv_id")
+    parts = slim.repartition(par, "conv_id")
     w = Window.partitionBy("conv_id", "turn_idx").orderBy("ts", "text")
     return (
         parts.withColumn("_rn", F.row_number().over(w))
@@ -168,9 +167,7 @@ def rule_predicate(tnorm_col):
     return out
 
 
-def rule_prefilter(
-    resolved: DataFrame, kernel_partitions: int | None = None
-) -> DataFrame:
+def rule_prefilter(resolved: DataFrame) -> DataFrame:
     """JVM-side predicate: only rule-bearing assistant turns reach Python.
 
     At 10^12-turn scale most turns carry no extractable pattern; this filter
@@ -187,19 +184,16 @@ def rule_prefilter(
     # kernel's parallelism to the cluster, not to the byte size. (Spark
     # sorts before round-robin redistribution, so this stays deterministic.)
     #
-    # Default cores*2. The kernel streams bounded Arrow batches (per-batch
-    # state resets; maxRecordsPerBatch caps memory), so per-task CPU is
-    # linear in rows and the multiplier trades scheduling overhead against
-    # wave balance only. Measured (tools/stress_4x.py + an interleaved ABBA
-    # run, BENCH/BASELINE.md): per-turn cost at 4x data is ~1.01x at a
-    # fixed multiplier (round 2's 1.45x was host noise), and cores*8 is
-    # ~1.25x SLOWER than cores*2 on quiet windows (task/python-worker
-    # dispatch overhead) — the constant stays. Callers with a known row
-    # volume can override kernel_partitions directly.
-    if kernel_partitions is None:
-        par = resolved.sparkSession.sparkContext.defaultParallelism
-        kernel_partitions = par * 2
-    return out.repartition(kernel_partitions)
+    # cores*2. The kernel streams bounded Arrow batches (per-batch state
+    # resets; maxRecordsPerBatch caps memory), so per-task CPU is linear in
+    # rows and the multiplier trades scheduling overhead against wave
+    # balance only. Measured (BENCH/BASELINE.md "Data-scale stress" + an
+    # interleaved ABBA run): per-turn cost at 4x data is ~1.01x at a fixed
+    # multiplier (round 2's 1.45x was host noise), and cores*8 is ~1.25x
+    # SLOWER than cores*2 on quiet windows (task/python-worker dispatch
+    # overhead) — the constant stays.
+    par = resolved.sparkSession.sparkContext.defaultParallelism
+    return out.repartition(par * 2)
 
 
 def extract_mentions(spark, prefiltered: DataFrame, maps: dict[str, dict[str, str]],

@@ -209,12 +209,10 @@ class KGPipeline:
         canonicalized symptom entities and the fixed locus vocabulary."""
         return self._symptom_locus
 
-    def mentions(
-        self, transcripts: DataFrame, kernel_partitions: int | None = None
-    ) -> DataFrame:
+    def mentions(self, transcripts: DataFrame) -> DataFrame:
         turns = ingest(transcripts)
         resolved = resolve_anchors(turns, self.formula_alias)
-        pre = rule_prefilter(resolved, kernel_partitions=kernel_partitions)
+        pre = rule_prefilter(resolved)
         return extract_mentions(self.spark, pre, self.maps, cache_key=self._cache_key)
 
     def triples(self, transcripts: DataFrame) -> DataFrame:

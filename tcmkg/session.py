@@ -100,9 +100,3 @@ def get_spark(
     except Exception:
         pass  # already added in this context
     return spark
-
-
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

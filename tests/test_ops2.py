@@ -396,6 +396,54 @@ def test_ivf_zero_vector_stays_reachable(spark):
     assert 99 in cids and cids[99] in valid
 
 
+def test_ivf_search_skips_degenerate_vectors(spark):
+    """A zero vector and a NULL embedding have no cosine: full-probe
+    ivf_search and ivf2_search never return them, their top-k equals a
+    numpy brute force over the real vectors, and the row-wise cosine
+    reaches Spark as NULL — a NaN would sort above every double and take
+    rank 1 in the desc top-k window."""
+    from tcmkg.kernels.vec import cosine_udf
+    from tcmkg.ops.ann import _as_double, build_ivf, build_ivf2, ivf2_search, ivf_search
+
+    e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    real = e.filter(F.col("vec_id") >= 5)
+    degenerate = spark.createDataFrame(
+        [(10_000, [0.0] * 64, 0), (10_001, None, 0)], real.schema
+    )
+    corpus = real.unionByName(degenerate)
+    q = e.filter(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("qid"), _as_double(F.col("embedding")).alias("qv")
+    )
+
+    rows = real.select("vec_id", "embedding").collect()
+    ids = np.array([r["vec_id"] for r in rows])
+    V = np.array([r["embedding"] for r in rows], dtype=np.float64)
+    V /= np.linalg.norm(V, axis=1, keepdims=True)
+    want = set()
+    for r in q.collect():
+        qv = np.array(r["qv"]) / np.linalg.norm(r["qv"])
+        order = np.lexsort((ids, -(V @ qv)))[:3]  # cos desc, then id
+        want |= {(r["qid"], rk + 1, int(ids[i])) for rk, i in enumerate(order)}
+
+    cent, assign = build_ivf(corpus, "vec_id", "embedding", n_centroids=4, n_iter=2)
+    flat = ivf_search(q, corpus, cent, assign, "vec_id", "embedding", nprobe=4, topk=3)
+    cent2, assign2 = build_ivf2(corpus, "vec_id", "embedding", n_coarse=2, n_sub=2,
+                                n_iter=2, sample_size=64)
+    two = ivf2_search(q, corpus, cent2, assign2, "vec_id", "embedding",
+                      n_coarse_probe=2, nprobe=4, topk=3)
+    for out in (flat, two):
+        got = {(r["qid"], r["rk"], r["neighbor"]) for r in out.collect()}
+        assert got == want
+
+    cos = (
+        q.crossJoin(degenerate)
+        .select(cosine_udf("qv", _as_double(F.col("embedding"))).alias("c"))
+        .select(F.col("c").isNull().alias("null"), F.isnan("c").alias("nan"))
+        .collect()
+    )
+    assert len(cos) == 10 and all(r["null"] and not r["nan"] for r in cos)
+
+
 def test_ivf_index_persistence(spark, tmp_path):
     """An IVF index persisted to the stage store searches identically after
     reload — index build cost amortizes across sessions."""

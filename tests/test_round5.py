@@ -238,15 +238,9 @@ def test_ivf_add_incremental_maintenance(spark, tmp_path):
     (3) the updated index round-trips through the store."""
     from pyspark.sql import functions as F
 
-    from tcmkg.ops.ann import (
-        _argmin_cid,
-        _as_double,
-        _norm,
-        build_ivf,
-        ivf_add,
-        load_ivf,
-        save_ivf,
-    )
+    import numpy as np
+
+    from tcmkg.ops.ann import build_ivf, ivf_add, load_ivf, save_ivf
     from tcmkg.pipeline.checkpoints import CheckpointStore
 
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -259,14 +253,15 @@ def test_ivf_add_incremental_maintenance(spark, tmp_path):
     save_ivf(store, cent0, assign0)
     cent, assign = ivf_add(spark, store, e, new, "vec_id", "embedding")
     cent_rows = sorted((r["cid"], list(r["cvec"])) for r in cent0.collect())
-    scratch = (
-        e.select(F.col("vec_id").alias("id"), _as_double("embedding").alias("v"))
-        .withColumn("v_norm", _norm(F.col("v")))
-        .withColumn("cid", _argmin_cid(cent_rows))
-        .select("id", "cid")
-    )
+    # independent brute force: highest cosine, first (lowest cid) on ties
+    C = np.array([v for _, v in cent_rows])
+    C /= np.linalg.norm(C, axis=1, keepdims=True)
+    scratch = set()
+    for r in e.select("vec_id", "embedding").collect():
+        v = np.array(r["embedding"], dtype=np.float64)
+        scratch.add((r["vec_id"], cent_rows[int(np.argmax(C @ (v / np.linalg.norm(v))))][0]))
     got = {(r["id"], r["cid"]) for r in assign.collect()}
-    assert got == {(r["id"], r["cid"]) for r in scratch.collect()}
+    assert got == scratch
     assert sorted((r["cid"], list(r["cvec"])) for r in cent.collect()) == cent_rows
 
     # (2) forced split

@@ -112,16 +112,10 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from tcmkg.ops.ann import _argmin_cid, _as_double, _norm
+    from tcmkg.ops.ann import build_ivf, build_ivf2
 
     emb = spark.read.parquet(f"{sf}/embeddings.parquet").filter(F.col("vec_id") >= 5)
-    base = emb.select(
-        F.col("vec_id").alias("id"), _as_double(F.col("embedding")).alias("v")
-    ).withColumn("v_norm", _norm(F.col("v")))
-    seeds = base.orderBy("id").limit(4).collect()
-    assign = base.withColumn(
-        "cid", _argmin_cid([(i, list(r["v"])) for i, r in enumerate(seeds)])
-    ).select("id", "cid")
+    _, assign = build_ivf(emb, "vec_id", "embedding", n_centroids=4, n_iter=1)
     from tcmkg.ops.dedup import lsh_candidate_pairs, minhash_signatures
 
     docs = spark.read.parquet(f"{sf}/documents.parquet")
@@ -139,24 +133,23 @@ def main() -> None:
 
     sections.append(
         (
-            "IVF k-means assign step (build_ivf inner loop)",
-            "Argmin over the centroid array literal is a pure map: scan → "
-            "project, zero Exchanges per Lloyd round (the round's only "
+            "IVF k-means assignments (build_ivf)",
+            "Nearest-centroid assignment is one mapInPandas over the "
+            "checkpointed vectors (the centroids ride in the kernel "
+            "closure): a pure map, zero Exchanges (a Lloyd round's only "
             "shuffle is the map-side-combinable centroid-update groupBy).",
             *render(assign),
         )
     )
 
-    from tcmkg.ops.ann import build_ivf2
-
     _, assign2 = build_ivf2(emb, "vec_id", "embedding", n_coarse=2, n_sub=2, n_iter=1)
     sections.append(
         (
-            "Hierarchical IVF assign (build_ivf2: the k~10^5 path)",
-            "Two-level assign = coarse argmin map + BROADCAST join to the "
-            "per-cell sub-centroid arrays + fold over the joined column: "
-            "the fact table is never hash-shuffled no matter how many "
-            "cells (no k-sized literal anywhere).",
+            "Hierarchical IVF assignments (build_ivf2: the k~10^5 path)",
+            "Two-level assign = a coarse nearest-centroid mapInPandas, then "
+            "a second one keyed by the coarse cid (each row scores only "
+            "its cell's sub-centroids): the fact table is never "
+            "hash-shuffled no matter how many cells.",
             *render(assign2),
         )
     )
