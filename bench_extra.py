@@ -32,7 +32,9 @@ def _spark():
     return get_spark("tcmkg-bench-extra", cores=CPUS)
 
 
-def _bench_query_fns(spark, sf_dir):
+def _bench_query_fns(spark, sf_dir, names=None):
+    """Query thunks by name. The KG pipeline and the bench corpus are built
+    only when `names` (None: every query) asks for a kg_* query."""
     from tcmkg.contract.generic import (
         q_ann_pq,
         q_ann_topk,
@@ -47,16 +49,20 @@ def _bench_query_fns(spark, sf_dir):
         q_simhash_pairs,
         q_tpch_q1,
     )
-    from tcmkg.contract.kg import _pipeline, transcriptize
 
-    pipe = _pipeline(spark)
-    import bench
+    kg = {}
+    if names is None or any(n.startswith("kg_") for n in names):
+        import bench
+        from tcmkg.contract.kg import _pipeline, transcriptize
 
-    corpus_path = bench.bench_corpus_path()
-    corpus = spark.read.parquet(corpus_path)
+        pipe = _pipeline(spark)
+        corpus = spark.read.parquet(bench.bench_corpus_path())
+        kg = {
+            "kg_triples_events": lambda: pipe.triples(transcriptize(spark, sf_dir)),
+            "kg_triples_corpus": lambda: pipe.triples(corpus),
+        }
     return {
-        "kg_triples_events": lambda: pipe.triples(transcriptize(spark, sf_dir)),
-        "kg_triples_corpus": lambda: pipe.triples(corpus),
+        **kg,
         "q_tpch_q1": lambda: q_tpch_q1(spark, sf_dir),
         "q_dim_join_revenue": lambda: q_dim_join_revenue(spark, sf_dir),
         "q_dedup_exact": lambda: q_dedup_exact(spark, sf_dir),
@@ -74,7 +80,7 @@ def _bench_query_fns(spark, sf_dir):
 
 def cmd_time(sf_dir: str, only: list[str]) -> None:
     spark = _spark()
-    fns = _bench_query_fns(spark, sf_dir)
+    fns = _bench_query_fns(spark, sf_dir, only or None)
     names = only or list(fns)
     # warmup: absorb JVM/codegen/python-worker spin-up (bench.py does the same)
     fns["q_tpch_q1"]().write.format("noop").mode("overwrite").save()
@@ -95,7 +101,7 @@ def cmd_time(sf_dir: str, only: list[str]) -> None:
 def cmd_plans(sf_dir: str, out_dir: str, only: list[str]) -> None:
     spark = _spark()
     os.makedirs(out_dir, exist_ok=True)
-    fns = _bench_query_fns(spark, sf_dir)
+    fns = _bench_query_fns(spark, sf_dir, only or None)
     for name in only or list(fns):
         df = fns[name]()
         p = df._jdf.queryExecution().explainString(

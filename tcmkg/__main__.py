@@ -168,9 +168,9 @@ def cmd_scrub(args) -> None:
 
 
 def cmd_stream_dedup(args) -> None:
-    import glob
     import os
 
+    from .pipeline.checkpoints import CheckpointStore
     from .session import get_spark
     from .streaming.ingest import stream_near_dedup
 
@@ -184,12 +184,9 @@ def cmd_stream_dedup(args) -> None:
         max_files_per_trigger=args.max_files_per_trigger,
     )
     ok = q.awaitTermination(args.timeout)
-    root = args.output.rstrip("/")
-    n_kept = n_removed = 0
-    if glob.glob(os.path.join(root, "docs", "epoch=*")):
-        n_kept = spark.read.parquet(root + "/docs").count()
-    if glob.glob(os.path.join(root, "removals", "epoch=*")):
-        n_removed = spark.read.parquet(root + "/removals").count()
+    docs, removals = (CheckpointStore(os.path.join(args.output, d)) for d in ("docs", "removals"))
+    n_kept = spark.read.parquet(docs.root).count() if docs.manifest else 0
+    n_removed = spark.read.parquet(removals.root).count() if removals.manifest else 0
     print(json.dumps({"status": "ok" if ok else "timeout",
                       "kept": n_kept, "removed": n_removed,
                       "output": args.output}))

@@ -7,9 +7,17 @@ merge_tcm_symptom.py:143-172). We reproduce that contract as parquet stage
 tables plus a JSON manifest: a stage whose manifest entry exists AND whose
 parquet is readable is skipped on re-run (kill-and-resume safe, idempotent).
 
-Stages are always parquet plus an atomic manifest rename. Iceberg tables
-(atomic commits, snapshot lineage) would replace that pair on a cluster
-with the Iceberg runtime; no Iceberg writer exists here.
+This store is the only code that publishes resumable state. `write` runs
+the Spark write into a hidden temp dir under the root
+(`.<stage>.tmp-<uuid>`; partition discovery skips dot-names); `publish`
+then, under the root's file lock, moves any old stage dir aside, renames
+the temp dir into place, merges the stage's entry into the re-read
+manifest and deletes the old dir. A failure or kill before the publish
+leaves no visible stage, and concurrent writers (processes included) never
+drop each other's entries. Stages named `<col>=<value>` form one
+partitioned table of the root; `partitions(col)` lists its committed
+values. Iceberg tables would replace all this on a cluster with the
+Iceberg runtime; no Iceberg writer exists here.
 
 A partitioned stage write is rebalanced by its partition columns first
 (the REBALANCE hint): AQE merges small shuffle partitions until each key's
@@ -17,11 +25,6 @@ rows sit in about one task, and splits a skewed key into advisory-size
 pieces. Without it every writing task emits one file per key it holds, so
 a stage of T tasks x K keys fans out into up to T*K tiny files that every
 later read lists and opens.
-
-Several stores may share one root (e.g. the gazetteer canon cache used by
-concurrent processes): each write re-reads the manifest and merges its own
-entry under an exclusive file lock, so a writer never drops an entry that
-another store committed after this one was constructed.
 """
 
 from __future__ import annotations
@@ -29,7 +32,10 @@ from __future__ import annotations
 import fcntl
 import json
 import os
+import shutil
 import time
+import uuid
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -59,6 +65,11 @@ class CheckpointStore:
             and os.path.exists(os.path.join(self._stage_path(stage), "_SUCCESS"))
         )
 
+    def partitions(self, col: str) -> dict[str, dict]:
+        """Manifest entries of the committed `<col>=<value>` stages, by value."""
+        p = col + "="
+        return {s[len(p):]: e for s, e in self.manifest.items() if s.startswith(p)}
+
     def read(self, spark: SparkSession, stage: str) -> DataFrame:
         return spark.read.parquet(self._stage_path(stage))
 
@@ -73,22 +84,52 @@ class CheckpointStore:
         (e.g. the minhash banding of a signature index) — recorded in the
         manifest entry so readers can validate compatibility instead of
         silently consuming an index built under different parameters."""
+        tmp = os.path.join(self.root, f".{stage}.tmp-{uuid.uuid4().hex}")
         w = df.write
         if partition_by:
             w = df.hint("rebalance", *partition_by).write.partitionBy(*partition_by)
-        w.mode("overwrite").parquet(self._stage_path(stage))
-        entry = {"completed_at": time.time(), **(meta or {})}
+        try:
+            w.parquet(tmp)
+            self.publish(tmp, stage, meta)
+        except BaseException:
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise
+
+    def publish(self, tmp: str, stage: str, meta: dict | None = None) -> None:
+        """Commit the finished stage dir `tmp` (under `root`) as `stage`.
+        Spark-free: two renames and a manifest merge under the root's lock,
+        so concurrent processes publishing into one root serialize here."""
+        dst = self._stage_path(stage)
+        old = os.path.join(self.root, f".{stage}.old-{uuid.uuid4().hex}")
+        with self._manifest_lock():
+            if os.path.exists(dst):
+                os.rename(dst, old)
+            os.rename(tmp, dst)
+            self.manifest[stage] = {"completed_at": time.time(), **(meta or {})}
+        shutil.rmtree(old, ignore_errors=True)
+
+    def clear(self) -> None:
+        """Unpublish every stage the manifest lists (a new lineage over the
+        same root). Dirs the store did not publish are left alone."""
+        with self._manifest_lock():
+            stages, self.manifest = list(self.manifest), {}
+        for stage in stages:
+            shutil.rmtree(self._stage_path(stage), ignore_errors=True)
+
+    @contextmanager
+    def _manifest_lock(self):
+        """Lock the root, re-read the manifest, write it back on clean exit."""
         mf = self._manifest_path()
         with open(mf + ".lock", "w") as lock:
             fcntl.flock(lock, fcntl.LOCK_EX)
             if os.path.exists(mf):
                 with open(mf) as f:
                     self.manifest = json.load(f)
-            self.manifest[stage] = entry
+            yield
             tmp = mf + ".tmp"
             with open(tmp, "w") as f:
                 json.dump(self.manifest, f, indent=2)
-            os.replace(tmp, mf)  # atomic manifest commit
+            os.replace(tmp, mf)
 
     def run_stage(
         self,

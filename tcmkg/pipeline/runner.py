@@ -15,6 +15,7 @@ the last complete stage with identical results (determinism test).
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import inspect
 import os
@@ -37,7 +38,7 @@ from . import locus as _locus
 from . import util as _util
 from .canonicalize import canonicalize, normalize_alias_map
 from .checkpoints import CheckpointStore
-from .extract import extract_mentions, ingest, resolve_anchors, rule_prefilter
+from .extract import MENTION_SCHEMA, extract_mentions, ingest, resolve_anchors, rule_prefilter
 from .locus import symptom_locus_edges
 from .triples import assemble_triples
 
@@ -81,6 +82,11 @@ def _gaz_fingerprint(gaz: Gazetteers) -> str:
         for row in records_to_rows(records):
             h.update(repr(sorted(row.items())).encode())
     return h.hexdigest()[:16]
+
+
+def _tranche_key(files: list[str]) -> str:
+    """run_incremental's tranche key: a hash of the tranche's input files."""
+    return hashlib.md5("\n".join(files).encode()).hexdigest()[:16]
 
 
 def _canon_frames(spark: SparkSession, etype: str, records):
@@ -287,19 +293,20 @@ class KGPipeline:
         self, landing_dir: str, checkpoint_dir: str
     ) -> dict[str, DataFrame | int]:
         """Incremental BATCH maintenance: process only input files not yet
-        in the checkpoint's input manifest, land their mention partials as
+        in the checkpoint's tranche manifest, land their mention partials as
         a new tranche, and assemble triples over ALL tranches (mention
         partials are combinable by construction — extract.py's map-side
         partial aggregates — so triples over the union of tranches equal a
         full-batch run over all files seen so far).
 
         This is the file-manifest equivalent of an Iceberg incremental read
-        (SURVEY §2.8): the manifest is the commit log. Crash safety mirrors
-        CheckpointStore — a tranche directory is visible only once the
-        manifest commit (atomic rename) lands; on startup any tranche dir
-        NOT in the manifest (a crashed run's partial write) is removed, so
-        a replay overwrites instead of double-counting. Idempotent: calling
-        again with no new files recomputes nothing.
+        (SURVEY §2.8): the CheckpointStore manifest under
+        `<checkpoint_dir>/mention_tranches` is the commit log. Each tranche
+        is its stage `tranche=<key>` (input files in the entry's `files`),
+        published by rename, so a crashed run leaves nothing visible; all
+        tranches read back as one scan filtered to the manifest's keys,
+        with `tranche` typed string. Idempotent: calling again with no new
+        files recomputes nothing.
 
         Carry-forward contract (same as streaming's foreachBatch path): a
         conversation must arrive whole within one tranche — files WITHIN a
@@ -311,31 +318,14 @@ class KGPipeline:
         -> {"mentions", "triples", "n_new_files"}; mentions carry a
         `tranche` partition column (per-tranche lineage for free).
         """
-        import glob
-        import json
-        import shutil
-
         spark = self.spark
-        os.makedirs(checkpoint_dir, exist_ok=True)
-        parts_root = os.path.join(checkpoint_dir, "mention_tranches")
-        manifest_path = os.path.join(checkpoint_dir, "_INPUT_MANIFEST.json")
-        manifest: dict = {"tranches": {}}
-        if os.path.exists(manifest_path):
-            with open(manifest_path) as f:
-                manifest = json.load(f)
-
-        # remove uncommitted tranche dirs (write completed, manifest commit
-        # did not) so the replay below overwrites instead of double-counting
-        for d in glob.glob(os.path.join(parts_root, "tranche=*")):
-            if os.path.basename(d).split("=", 1)[1] not in manifest["tranches"]:
-                shutil.rmtree(d, ignore_errors=True)
-
+        store = CheckpointStore(os.path.join(checkpoint_dir, "mention_tranches"))
         # realpath both sides: the same landing dir spelled differently
         # (relative vs absolute, symlinks) must not re-process files
         seen = {
             os.path.realpath(f)
-            for fl in manifest["tranches"].values()
-            for f in fl
+            for e in store.partitions("tranche").values()
+            for f in e["files"]
         }
         files = sorted(
             os.path.realpath(f)
@@ -343,25 +333,16 @@ class KGPipeline:
         )
         new = [f for f in files if f not in seen]
         if new:
-            key = hashlib.md5("\n".join(new).encode()).hexdigest()[:16]
-            tranche_mentions = self.mentions(spark.read.parquet(*new))
-            tranche_mentions.write.mode("overwrite").parquet(
-                os.path.join(parts_root, f"tranche={key}")
+            store.write(
+                self.mentions(spark.read.parquet(*new)),
+                f"tranche={_tranche_key(new)}",
+                meta={"files": new},
             )
-            manifest["tranches"][key] = new
-            tmp = manifest_path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(manifest, f, indent=2)
-            os.replace(tmp, manifest_path)  # atomic commit
-
-        if manifest["tranches"]:
-            mentions = spark.read.parquet(parts_root)
-        else:
-            from .extract import MENTION_SCHEMA
-
-            # same schema as the committed-tranche branch (incl. the
-            # partition column) so callers can union results across calls
-            mentions = spark.createDataFrame([], MENTION_SCHEMA + ", tranche string")
+        mentions = (
+            spark.read.schema(MENTION_SCHEMA + ", tranche string")
+            .parquet(store.root)
+            .filter(F.col("tranche").isin(list(store.partitions("tranche"))))
+        )
         return {
             "mentions": mentions,
             "triples": assemble_triples(mentions),

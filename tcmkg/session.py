@@ -35,6 +35,13 @@ def package_zip(dest_dir: str = "/tmp") -> str:
     return out
 
 
+def default_driver_memory() -> str:
+    """The smaller of 24g and half the host's physical memory: a driver JVM
+    sized past that gets OOM-killed once a second Spark process runs."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(24 * 1024, phys // 2**21)}m"
+
+
 def get_spark(
     app_name: str = "tcmkg",
     cores: int | str | None = None,
@@ -67,7 +74,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("TCMKG_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", os.environ.get("TCMKG_DRIVER_MEM", default_driver_memory()))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -16,11 +16,11 @@ arrival shape a production transcript feed has:
                        union of landed partials equal a batch run over all
                        data seen so far. foreachBatch alone is only
                        at-least-once (a crash after the write but before
-                       the checkpoint commit replays the epoch); the
-                       epoch-keyed OVERWRITE makes the replay idempotent —
-                       the re-run replaces its own directory instead of
-                       appending duplicates — which yields exactly-once
-                       *output* end to end.
+                       the checkpoint commit replays the epoch); each
+                       epoch is a CheckpointStore stage published by
+                       rename, so the re-run replaces its own directory
+                       instead of appending duplicates — which yields
+                       exactly-once *output* end to end.
 
 Carry-forward across batches: T2b lines ("亦主治…") need the conversation's
 earlier turns; micro-batches see only new rows. `incremental_mentions`
@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..pipeline.checkpoints import CheckpointStore
 
 TRANSCRIPT_SCHEMA = T.StructType(
     [
@@ -230,16 +232,17 @@ def incremental_triples_stateful(
 
 
 def mention_sink(pipe, out_dir: str):
-    """foreachBatch function: land this epoch's mention partials at
-    `{out_dir}/epoch=<epoch_id>` with OVERWRITE. Replaying an epoch (crash
-    between write and checkpoint commit) replaces its own directory —
-    idempotent, so downstream reads see each epoch exactly once. Readers
+    """foreachBatch function: publish this epoch's mention partials as the
+    CheckpointStore stage `epoch=<epoch_id>` of a store rooted at
+    `out_dir`. Replaying an epoch (crash between write and checkpoint
+    commit) replaces its own directory by rename — idempotent, so
+    downstream reads see each epoch exactly once. Readers
     `spark.read.parquet(out_dir)` get an `epoch` partition column for free
     (lineage: which micro-batch produced which partials)."""
+    store = CheckpointStore(out_dir)
 
     def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        mentions = pipe.mentions(batch_df)
-        mentions.write.mode("overwrite").parquet(f"{out_dir}/epoch={int(epoch_id)}")
+        store.write(pipe.mentions(batch_df), f"epoch={int(epoch_id)}")
 
     return per_batch
 
@@ -265,23 +268,19 @@ def incremental_mentions(
 ):
     """Start a stream landing mention partials per micro-batch.
 
-    Epoch-keyed OVERWRITE is exactly-once only WITHIN one checkpoint
+    Epoch-keyed publish is exactly-once only WITHIN one checkpoint
     lineage: a fresh/deleted checkpoint restarts epoch ids at 0, which would
-    overwrite epoch=0 but leave stale higher-epoch partials from the prior
+    replace epoch=0 but leave stale higher-epoch partials from the prior
     lineage silently double-counting mentions. So a fresh checkpoint clears
-    the prior lineage's epoch=* partial dirs before the stream starts — one
-    output directory belongs to one checkpoint lineage. Only epoch=* dirs
-    are removed (this sink's own layout), never unrelated caller data."""
-    import glob
-    import os
-    import shutil
-
+    the prior lineage's epochs before the stream starts — one output
+    directory belongs to one checkpoint lineage. Only the stages the sink
+    published (the out_dir manifest) are removed, never unrelated caller
+    data."""
     from ..pipeline.runner import KGPipeline
 
     pipe = pipeline or KGPipeline(spark)
     if _fresh_checkpoint(checkpoint_dir):
-        for d in glob.glob(os.path.join(out_dir, "epoch=*")):
-            shutil.rmtree(d, ignore_errors=True)
+        CheckpointStore(out_dir).clear()
     stream = stream_transcripts(spark, landing_dir)
 
     return (
@@ -316,9 +315,9 @@ def stream_near_dedup(
           → foreachBatch: exact id-dedup within the batch, then
             near_dedup_incremental(seen_kept, batch,
                                    seen_sigs=<persisted index>)
-          → kept docs + removals land per EPOCH (idempotent overwrite);
-            the kept docs' minhash signatures are appended to the
-            PERSISTED SIGNATURE INDEX (CheckpointStore, banding recorded)
+          → kept docs, removals and the kept docs' minhash signatures
+            are each published as the CheckpointStore stage `epoch=N`
+            (banding recorded in the signature stage's manifest entry)
 
     Per-micro-batch cost is sign(batch) + bucket join against the index —
     the corpus text is only touched to verify candidate pairs, so the
@@ -330,67 +329,44 @@ def stream_near_dedup(
     doc ids must be monotone across micro-batches — every earlier-landed
     id below every later id (the standard crawl-ingestion layout).
 
-    Outputs under `out_dir`:
+    Outputs under `out_dir`, one CheckpointStore per directory:
       docs/epoch=N/      kept docs of micro-batch N
       removals/epoch=N/  (removed_doc, keep_doc, via) of micro-batch N
-      sigstore/          CheckpointStore: sigs_<N> index stages + banding
+      sigstore/epoch=N/  the signature index of micro-batch N's kept docs
 
-    Epoch-keyed OVERWRITE makes retries idempotent within one checkpoint
-    lineage (same rule as incremental_mentions: fresh checkpoint clears
-    prior epoch dirs)."""
-    import glob
+    The sigstore manifest is the commit log: an epoch is prior once its
+    signature stage is committed, and each batch reads the signature index
+    and the seen docs once each, filtered to the prior epochs. A retry
+    republishes its own epoch; a fresh checkpoint clears the prior lineage
+    (as in incremental_mentions)."""
     import os
-    import re
-    import shutil
 
-    from ..ops.dedup import (
-        near_dedup,
-        near_dedup_incremental,
-        read_signature_index,
-        write_signature_index,
+    from ..ops.dedup import near_dedup, near_dedup_incremental, write_signature_index
+
+    docs, removals, sigs = (
+        CheckpointStore(os.path.join(out_dir, d)) for d in ("docs", "removals", "sigstore")
     )
-    from ..pipeline.checkpoints import CheckpointStore
-
-    docs_root = os.path.join(out_dir, "docs")
-    rm_root = os.path.join(out_dir, "removals")
-    store_root = os.path.join(out_dir, "sigstore")
     if _fresh_checkpoint(checkpoint_dir):
-        for root in (docs_root, rm_root):
-            for d in glob.glob(os.path.join(root, "epoch=*")):
-                shutil.rmtree(d, ignore_errors=True)
-        shutil.rmtree(store_root, ignore_errors=True)
+        for store in (docs, removals, sigs):
+            store.clear()
 
     def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        store = CheckpointStore(store_root)
         batch = batch_df.dropDuplicates([id_col])
-        prior = sorted(
-            int(m.group(1))
-            for d in glob.glob(os.path.join(docs_root, "epoch=*"))
-            if (m := re.fullmatch(r"epoch=(\d+)", os.path.basename(d)))
-            and int(m.group(1)) < epoch_id
-            and store.has(f"sigs_{m.group(1)}")  # committed epochs only
-        )
+        prior = {
+            int(e): m for e, m in sigs.partitions("epoch").items() if int(e) < epoch_id
+        }
         if prior:
-            seen = spark.read.parquet(
-                *[os.path.join(docs_root, f"epoch={e}") for e in prior]
-            )
-            sig_frames = []
-            for e in prior:
-                sigs_e, banding = read_signature_index(store, spark, f"sigs_{e}")
-                if banding is not None and banding != (n_bands, rows_per_band):
-                    raise ValueError(
-                        f"epoch {e} signature index banding {banding} != "
-                        f"stream banding ({n_bands}, {rows_per_band})"
-                    )
-                sig_frames.append(sigs_e)
-            seen_sigs = sig_frames[0]
-            for s in sig_frames[1:]:
-                seen_sigs = seen_sigs.unionByName(s)
+            bandings = {(m["n_bands"], m["rows_per_band"]) for m in prior.values()}
+            if bandings != {(n_bands, rows_per_band)}:
+                raise ValueError(f"signature index banding {bandings} != ({n_bands}, {rows_per_band})")
+            in_prior = F.col("epoch").isin(list(prior))
+            seen = spark.read.parquet(docs.root).filter(in_prior).drop("epoch")
             res = near_dedup_incremental(
                 seen, batch, id_col, text_col,
                 n_bands=n_bands, rows_per_band=rows_per_band,
                 max_bucket=max_bucket, threshold=threshold,
-                seen_sigs=seen_sigs, seen_banding=(n_bands, rows_per_band),
+                seen_sigs=spark.read.parquet(sigs.root).filter(in_prior).drop("epoch"),
+                seen_banding=(n_bands, rows_per_band),
             )
             kept = res["kept_new"]
         else:
@@ -401,20 +377,16 @@ def stream_near_dedup(
                 max_bucket=max_bucket, threshold=threshold,
             )
             kept = res["kept"]
-        kept.select(id_col, text_col).write.mode("overwrite").parquet(
-            os.path.join(docs_root, f"epoch={epoch_id}")
-        )
-        res["removals"].write.mode("overwrite").parquet(
-            os.path.join(rm_root, f"epoch={epoch_id}")
-        )
+        stage = f"epoch={epoch_id}"
+        docs.write(kept.select(id_col, text_col), stage)
+        removals.write(res["removals"], stage)
         # sign the LANDED kept docs (re-read: one lineage for index+docs);
-        # the store.write manifest commit is the epoch's atomic publish —
-        # a retry after a crash between the parquet writes and this commit
-        # re-runs the whole epoch against the same `prior` set
+        # the signature stage's commit is the epoch's publish — a retry
+        # after a crash before it re-runs the whole epoch against the same
+        # `prior` set
         write_signature_index(
-            store,
-            spark.read.parquet(os.path.join(docs_root, f"epoch={epoch_id}")),
-            f"sigs_{epoch_id}", id_col, text_col, n_bands, rows_per_band,
+            sigs, docs.read(spark, stage), stage, id_col, text_col,
+            n_bands, rows_per_band,
         )
         res["unpersist"]()
 

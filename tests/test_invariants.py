@@ -249,6 +249,110 @@ def test_checkpoint_manifest_merges_stores(tmp_path, spark):
     assert fresh.read(spark, "from_a").count() == 3
 
 
+def _publish_worker(root, tag, n, barrier):
+    """One OS process of test_checkpoint_two_process_publish: pyarrow
+    writes finished stage dirs under `root`, then the Spark-free publish
+    commits them — ten own stages, then the shared stage ten times."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tcmkg.pipeline.checkpoints import CheckpointStore
+
+    store = CheckpointStore(root)
+
+    def finished_dir(stage, i):
+        tmp = os.path.join(root, f".{stage}.tmp-{tag}{i}")
+        os.makedirs(tmp)
+        pq.write_table(pa.table({"id": list(range(n))}), os.path.join(tmp, "part-0.parquet"))
+        open(os.path.join(tmp, "_SUCCESS"), "w").close()
+        return tmp
+
+    for stages in ([f"{tag}{i}" for i in range(10)], ["same"] * 10):
+        tmps = [finished_dir(stage, i) for i, stage in enumerate(stages)]
+        barrier.wait(120)
+        for tmp, stage in zip(tmps, stages):
+            store.publish(tmp, stage)
+
+
+def test_checkpoint_two_process_publish(tmp_path, spark):
+    """Two OS processes publish into one root at once, first different
+    stages, then the same stage: both finish, the manifest lists every
+    stage, every stage is readable and no temp or moved-aside dir is left."""
+    import multiprocessing
+    import os
+
+    from tcmkg.pipeline.checkpoints import CheckpointStore
+
+    root = str(tmp_path / "shared")
+    ctx = multiprocessing.get_context("spawn")
+    barrier = ctx.Barrier(2)
+    procs = [
+        ctx.Process(target=_publish_worker, args=(root, tag, n, barrier))
+        for tag, n in (("a", 3), ("b", 4))
+    ]
+    for p in procs:
+        p.start()
+    for p in procs:
+        p.join(300)
+    assert [p.exitcode for p in procs] == [0, 0]
+
+    store = CheckpointStore(root)
+    stages = {f"{t}{i}" for t in "ab" for i in range(10)} | {"same"}
+    assert set(store.manifest) == stages
+    assert all(store.has(s) for s in stages)
+    for s in stages - {"same"}:
+        assert store.read(spark, s).count() == (3 if s[0] == "a" else 4)
+    assert store.read(spark, "same").count() in (3, 4)
+    assert sorted(os.listdir(root)) == sorted(stages | {"_MANIFEST.json", "_MANIFEST.json.lock"})
+
+
+def test_checkpoint_failed_publish_leaves_no_stage(tmp_path, spark, monkeypatch):
+    """A failure after the Spark write and before the publish leaves no
+    visible stage — neither from the raising writer nor from the finished
+    temp dir a killed writer would leave — and the next run_stage
+    recomputes."""
+    import shutil
+
+    from tcmkg.pipeline.checkpoints import CheckpointStore
+
+    root = str(tmp_path / "crash")
+    store = CheckpointStore(root)
+    store.write(spark.range(3), "epoch=0")
+
+    def killed(self, tmp, stage, meta=None):
+        shutil.copytree(tmp, tmp + "-killed")  # what a killed process leaves
+        raise RuntimeError("killed before publish")
+
+    monkeypatch.setattr(CheckpointStore, "publish", killed)
+    with pytest.raises(RuntimeError):
+        store.write(spark.range(10, 15), "epoch=1")
+    monkeypatch.undo()
+
+    for s in (store, CheckpointStore(root)):
+        assert s.has("epoch=0") and not s.has("epoch=1")
+    assert sorted(r["id"] for r in spark.read.parquet(root).collect()) == [0, 1, 2]
+
+    calls = []
+    df = store.run_stage(spark, "epoch=1", lambda: calls.append(1) or spark.range(10, 15))
+    assert calls == [1] and df.count() == 5
+    assert sorted((r["epoch"], r["id"]) for r in spark.read.parquet(root).collect()) == (
+        [(0, i) for i in range(3)] + [(1, i) for i in range(10, 15)]
+    )
+
+
+def test_default_driver_memory(monkeypatch):
+    """Driver memory defaults to the smaller of 24g and half the host's
+    physical memory; TCMKG_DRIVER_MEM overrides it in get_spark."""
+    from tcmkg import session
+
+    for phys_gib, want in ((15, "7680m"), (256, "24576m")):
+        pages = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": phys_gib * 2**30 // 4096}
+        monkeypatch.setattr(session.os, "sysconf", pages.__getitem__)
+        assert session.default_driver_memory() == want
+
+
 def test_unlinked_diagnostics_and_soft_link(spark, pipeline, transcripts_df):
     """Tier-3 linking: unresolved mentions surface as diagnostics (the
     reference's unrecorded-herb counter) and the embedding soft-linker

@@ -242,9 +242,11 @@ def test_run_incremental_two_tranches_equal_batch(
 ):
     """Two incremental runs over staggered arrivals must equal one batch
     run (and the oracle); a third run with no new files is a no-op; a
-    crashed run's uncommitted tranche dir is cleaned up, not double-counted."""
+    crashed run's uncommitted tranche dir is never read, not double-counted."""
     import os
     import shutil
+
+    from tcmkg.pipeline.checkpoints import CheckpointStore
 
     landing, a, b, kw = _land_halves(tmp_path, transcripts_pdf)
     ckpt = str(tmp_path / "ckpt")
@@ -266,15 +268,17 @@ def test_run_incremental_two_tranches_equal_batch(
     assert {(r["subj"], r["pred"], r["obj"])
             for r in out3["triples"].collect()} == want
 
-    # kill-between-tranches: a tranche dir written WITHOUT a manifest
-    # commit (crash between write and rename) must be swept, and the
-    # replayed run must land the same totals — not doubled
+    # kill-between-tranches: a tranche dir WITHOUT a manifest entry (not
+    # published by the store) must not be read, and the replayed run must
+    # land the same totals — not doubled
     stale = os.path.join(ckpt, "mention_tranches", "tranche=deadbeef")
     committed = os.path.join(ckpt, "mention_tranches")
     src = next(d for d in os.listdir(committed) if d.startswith("tranche="))
     shutil.copytree(os.path.join(committed, src), stale)
     out4 = pipeline.run_incremental(str(landing), ckpt)
-    assert not os.path.exists(stale)
+    keys = {r["tranche"] for r in out4["mentions"].select("tranche").distinct().collect()}
+    assert keys == set(CheckpointStore(committed).partitions("tranche"))
+    assert len(keys) == 2 and "deadbeef" not in keys
     assert {(r["subj"], r["pred"], r["obj"])
             for r in out4["triples"].collect()} == want
     # weights prove no double-count (n/amt_sum inflation would skew them)
@@ -283,6 +287,22 @@ def test_run_incremental_two_tranches_equal_batch(
     w2 = {(r["subj"], r["obj"]): round(r["weight"] or 0.0, 9)
           for r in out2["triples"].filter(F.col("pred") == "formula_contains_herb").collect()}
     assert w4 == w2
+
+
+def test_run_incremental_tranche_key_stays_string(
+    spark, tmp_path, pipeline, transcripts_pdf, monkeypatch
+):
+    """A tranche key that is all decimal digits reads back as the same
+    string, leading zero included (partition-type inference would turn
+    it into the number 123456789012345)."""
+    from tcmkg.pipeline import runner
+
+    landing, a, _, kw = _land_halves(tmp_path, transcripts_pdf)
+    a.to_parquet(landing / "arrival_0.parquet", **kw)
+    monkeypatch.setattr(runner, "_tranche_key", lambda files: "0123456789012345")
+    out = pipeline.run_incremental(str(landing), str(tmp_path / "ckpt"))
+    keys = [r["tranche"] for r in out["mentions"].select("tranche").distinct().collect()]
+    assert keys == ["0123456789012345"]
 
 
 def test_ivf2_hierarchical_search(spark):
