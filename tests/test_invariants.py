@@ -344,7 +344,7 @@ def test_checkpoint_failed_publish_leaves_no_stage(tmp_path, spark, monkeypatch)
 
 def test_default_driver_memory(monkeypatch):
     """Driver memory defaults to the smaller of 24g and half the host's
-    physical memory; TCMKG_DRIVER_MEM overrides it in get_spark."""
+    physical memory (computed without starting a session)."""
     from tcmkg import session
 
     for phys_gib, want in ((15, "7680m"), (256, "24576m")):
