@@ -185,8 +185,10 @@ def cmd_stream_dedup(args) -> None:
     )
     ok = q.awaitTermination(args.timeout)
     docs, removals = (CheckpointStore(os.path.join(args.output, d)) for d in ("docs", "removals"))
-    n_kept = spark.read.parquet(docs.root).count() if docs.manifest else 0
-    n_removed = spark.read.parquet(removals.root).count() if removals.manifest else 0
+    n_kept, n_removed = (
+        s.read_committed(spark, "epoch").count() if s.partitions("epoch") else 0
+        for s in (docs, removals)
+    )
     print(json.dumps({"status": "ok" if ok else "timeout",
                       "kept": n_kept, "removed": n_removed,
                       "output": args.output}))

@@ -878,6 +878,7 @@ def q_stream_neardup(spark, sf_dir):
     import shutil
     import tempfile
 
+    from ..pipeline.checkpoints import CheckpointStore
     from ..streaming.ingest import stream_near_dedup
 
     d = _read(spark, sf_dir, "documents").select("doc_id", "text")
@@ -901,7 +902,8 @@ def q_stream_neardup(spark, sf_dir):
     )
     assert q.awaitTermination(600), "stream_near_dedup timed out (600s)"
     rows = (
-        spark.read.parquet(os.path.join(tmp, "out", "removals"))
+        CheckpointStore(os.path.join(tmp, "out", "removals"))
+        .read_committed(spark, "epoch")
         .select("removed_doc", "keep_doc", "via")
         .collect()
     )

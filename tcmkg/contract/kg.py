@@ -811,6 +811,7 @@ def q_kg_stream_contains(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import tempfile
 
+    from ..pipeline.checkpoints import CheckpointStore
     from ..pipeline.triples import assemble_triples
     from ..streaming.ingest import incremental_mentions
 
@@ -826,7 +827,7 @@ def q_kg_stream_contains(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).parquet(landing)
     q = incremental_mentions(spark, landing, out, ckpt, pipeline=p)
     assert q.awaitTermination(600), "streaming query timed out (600s)"
-    t = assemble_triples(spark.read.parquet(out))
+    t = assemble_triples(CheckpointStore(out).read_committed(spark, "epoch"))
     return _materialize_then_cleanup(
         spark,
         t.filter(F.col("pred") == "formula_contains_herb").select(

@@ -14,10 +14,20 @@ then, under the root's file lock, moves any old stage dir aside, renames
 the temp dir into place, merges the stage's entry into the re-read
 manifest and deletes the old dir. A failure or kill before the publish
 leaves no visible stage, and concurrent writers (processes included) never
-drop each other's entries. Stages named `<col>=<value>` form one
-partitioned table of the root; `partitions(col)` lists its committed
-values. Iceberg tables would replace all this on a cluster with the
-Iceberg runtime; no Iceberg writer exists here.
+drop each other's entries. Iceberg tables would replace all this on a
+cluster with the Iceberg runtime; no Iceberg writer exists here.
+
+The manifest entry carries the stage's schema as parquet stores it (every
+field nullable; partition columns left to path discovery, which runs no
+job). `read` hands it to `spark.read.schema`, so a stage read never runs
+the footer-sampling inference job. Entries without a schema (written by
+an older version) still read by inference.
+
+Stages named `<col>=<value>` form one partitioned table of the root;
+`partitions(col)` lists its committed values and `read_committed(col)`
+reads exactly those, with `col` typed string. A stage dir that a crash
+left renamed into place but without a manifest entry is invisible to it,
+where a whole-root `spark.read.parquet` would include it.
 
 A partitioned stage write is rebalanced by its partition columns first
 (the REBALANCE hint): AQE merges small shuffle partitions until each key's
@@ -39,6 +49,21 @@ from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+
+def _nullable(t):
+    """A schema's JSON form with every field, element and value nullable:
+    what a parquet read reports for whatever schema was written."""
+    if isinstance(t, dict):
+        return {
+            k: True if k in ("nullable", "containsNull", "valueContainsNull") else _nullable(v)
+            for k, v in t.items()
+        }
+    if isinstance(t, list):
+        return [_nullable(v) for v in t]
+    return t
 
 
 @dataclass
@@ -71,7 +96,23 @@ class CheckpointStore:
         return {s[len(p):]: e for s, e in self.manifest.items() if s.startswith(p)}
 
     def read(self, spark: SparkSession, stage: str) -> DataFrame:
-        return spark.read.parquet(self._stage_path(stage))
+        schema = self.manifest.get(stage, {}).get("schema")
+        r = spark.read if schema is None else spark.read.schema(T.StructType.fromJson(schema))
+        return r.parquet(self._stage_path(stage))
+
+    def read_committed(self, spark: SparkSession, col: str) -> DataFrame:
+        """The committed `<col>=<value>` stages as one table of the root,
+        `col` typed string (an all-digit value keeps its leading zeros).
+        Needs at least one committed stage: its schema is the table's."""
+        parts = self.partitions(col)
+        if not parts:
+            raise FileNotFoundError(f"no committed {col}= stage under {self.root}")
+        stage = self.read(spark, f"{col}={next(iter(parts))}").schema
+        schema = T.StructType(stage.fields + [T.StructField(col, T.StringType())])
+        return (
+            spark.read.schema(schema).parquet(self.root)
+            .filter(F.col(col).isin(list(parts)))
+        )
 
     def write(
         self,
@@ -88,9 +129,10 @@ class CheckpointStore:
         w = df.write
         if partition_by:
             w = df.hint("rebalance", *partition_by).write.partitionBy(*partition_by)
+        schema = _nullable(df.drop(*(partition_by or [])).schema.jsonValue())
         try:
             w.parquet(tmp)
-            self.publish(tmp, stage, meta)
+            self.publish(tmp, stage, {"schema": schema, **(meta or {})})
         except BaseException:
             shutil.rmtree(tmp, ignore_errors=True)
             raise

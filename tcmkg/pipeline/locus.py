@@ -20,15 +20,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..fixtures.locus import locus_surface_rows
+from .util import local_frame
 
 
 def symptom_locus_edges(nodes: DataFrame) -> DataFrame:
     """nodes: the canonical node table (canonical_id, entity_type,
     names array<string>, ...) -> (subj symptom_id, obj locus_id) distinct.
     """
-    spark = nodes.sparkSession
-    surf = spark.createDataFrame(
-        locus_surface_rows(), schema="surface string, locus_id string"
+    surf = local_frame(
+        nodes.sparkSession, locus_surface_rows(), "surface string, locus_id string"
     )
     sym = nodes.filter(F.col("entity_type") == "symptom").select(
         "canonical_id", F.explode("names").alias("name")

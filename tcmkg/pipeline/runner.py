@@ -92,7 +92,7 @@ def _tranche_key(files: list[str]) -> str:
 def _canon_frames(spark: SparkSession, etype: str, records):
     """-> (alias2canon thunk, folded node-table thunk) for one entity type;
     both share one canonicalization, computed at most once."""
-    rec_df = spark.createDataFrame(records_to_rows(records), schema=_GAZ_SCHEMA)
+    rec_df = _util.local_frame(spark, records_to_rows(records), _GAZ_SCHEMA)
     canon_cache: dict[str, DataFrame] = {}
 
     def _canon() -> dict[str, DataFrame]:
@@ -127,12 +127,11 @@ def _union_nodes(spark: SparkSession, per_type: list[DataFrame]) -> DataFrame:
     those the fixed vocabulary IS the entity table (reference
     extract_herb.py:466-585 + merge_tcm_symptom.py:92-98 write them as
     static entity CSVs), constants with no CC needed."""
-    dims = spark.createDataFrame(
+    dims = _util.local_frame(
+        spark,
         _dimensions.dim_node_rows() + _locus_vocab.locus_node_rows(),
-        schema=(
-            "canonical_id string, entity_type string, names array<string>, "
-            "symmap_id string, extdb_id string, source_records array<string>"
-        ),
+        "canonical_id string, entity_type string, names array<string>, "
+        "symmap_id string, extdb_id string, source_records array<string>",
     )
     out = per_type[0]
     for n in per_type[1:] + [dims]:
@@ -160,6 +159,12 @@ class KGPipeline:
     `symptom_locus` (the symptom→locus edges). A warm session reads the
     alias maps and the two full tables and nothing else. Pass
     canon_dir=None to recompute lazily in memory.
+
+    `run` checkpoints its four stages unpartitioned: every reader of
+    `s1_mentions` and `s2_triples` (the triple assembly, `_metrics`, the
+    export) scans every kind and predicate, so a `kind=`/`pred=` layout
+    would only cost one file per key on the write and one task per file
+    on each resume read.
     """
 
     _instances = 0
@@ -189,8 +194,9 @@ class KGPipeline:
                 per_type.append(partial(store.run_stage, spark, f"nodes_{etype}", nodes_df))
             rows = [(r["alias"], r["canonical_id"]) for r in alias2canon.collect()]
             self.maps[etype] = normalize_alias_map(rows)
-        self.formula_alias = spark.createDataFrame(
-            list(self.maps["formula"].items()), schema="alias string, canonical_id string"
+        # both broadcast joins of resolve_anchors scan it on every run
+        self.formula_alias = _util.local_frame(
+            spark, list(self.maps["formula"].items()), "alias string, canonical_id string"
         )
 
         def _nodes_all() -> DataFrame:
@@ -268,11 +274,12 @@ class KGPipeline:
 
         store = CheckpointStore(checkpoint_dir)
         spark = self.spark
-        # s1 is not partitioned by kind: reduce_mentions and _metrics read
-        # every kind in one scan, so a per-kind layout would only add a
-        # partition-discovery job to each read and one file per
-        # (task, kind) to the write. Stages written partitioned by kind
-        # still resume (partition discovery restores the column).
+        # No stage is partitioned: reduce_mentions and _metrics read every
+        # kind in one scan, and export_reference_layout and _metrics read
+        # every predicate. A `pred=` layout cost s2 a serial write of one
+        # file per predicate (47) and a 47-task scan on every resume. Stages
+        # written partitioned by kind or pred still resume (partition
+        # discovery restores the column).
         mentions = store.run_stage(
             spark, "s1_mentions",
             lambda: self.mentions(transcripts),
@@ -280,11 +287,7 @@ class KGPipeline:
             # recompute, not resume (metrics reference the new columns)
             expect_cols=["amt_min", "amt_max"],
         )
-        triples = store.run_stage(
-            spark, "s2_triples",
-            lambda: assemble_triples(mentions),
-            partition_by=["pred"],
-        )
+        triples = store.run_stage(spark, "s2_triples", lambda: assemble_triples(mentions))
         nodes = store.run_stage(spark, "s3_nodes", self.nodes_table)
         metrics = store.run_stage(spark, "s4_metrics", lambda: self._metrics(mentions, triples))
         return {"mentions": mentions, "triples": triples, "nodes": nodes, "metrics": metrics}
@@ -304,8 +307,8 @@ class KGPipeline:
         `<checkpoint_dir>/mention_tranches` is the commit log. Each tranche
         is its stage `tranche=<key>` (input files in the entry's `files`),
         published by rename, so a crashed run leaves nothing visible; all
-        tranches read back as one scan filtered to the manifest's keys,
-        with `tranche` typed string. Idempotent: calling again with no new
+        tranches read back as one scan filtered to the manifest's keys
+        (`CheckpointStore.read_committed`), with `tranche` typed string. Idempotent: calling again with no new
         files recomputes nothing.
 
         Carry-forward contract (same as streaming's foreachBatch path): a
@@ -338,11 +341,10 @@ class KGPipeline:
                 f"tranche={_tranche_key(new)}",
                 meta={"files": new},
             )
-        mentions = (
-            spark.read.schema(MENTION_SCHEMA + ", tranche string")
-            .parquet(store.root)
-            .filter(F.col("tranche").isin(list(store.partitions("tranche"))))
-        )
+        if store.partitions("tranche"):
+            mentions = store.read_committed(spark, "tranche")
+        else:  # nothing landed yet
+            mentions = _util.local_frame(spark, [], MENTION_SCHEMA + ", tranche string")
         return {
             "mentions": mentions,
             "triples": assemble_triples(mentions),

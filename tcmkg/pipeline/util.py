@@ -1,9 +1,25 @@
-"""Engine utilities: scalable deterministic ranking, distinct counts per group."""
+"""Engine utilities: driver-side constant tables, scalable deterministic
+ranking, distinct counts per group."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+
+
+def local_frame(spark: SparkSession, rows: list, schema: str | T.StructType) -> DataFrame:
+    """A constant table built on the driver (rows: dicts, or tuples in
+    schema order) as a JVM-local relation. The rows cross to the JVM once
+    as Arrow batches, so a scan of the frame is a LocalTableScan. A plain
+    `spark.createDataFrame(list)` instead gives a LogicalRDD of pickled
+    rows, and every scan of it starts Python tasks to re-serialize them."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    recs = [r if isinstance(r, dict) else dict(zip(schema.names, r)) for r in rows]
+    return spark.createDataFrame(pa.Table.from_pylist(recs, to_arrow_schema(schema)), schema)
 
 
 def stable_rank(df: DataFrame, order_col: str, rank_col: str = "rank",

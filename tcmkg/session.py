@@ -2,10 +2,7 @@
 
 Local mode stands in for a multi-executor cluster; every knob here is the
 one we would also set on a real 1000-executor deployment (AQE, skew join,
-Arrow batching, sane shuffle partitioning). Iceberg jars are not present in
-this sandbox image, so checkpoint tables fall back to parquet-with-manifest
-(see pipeline/checkpoints.py); on a cluster with the iceberg-spark-runtime
-jar, `iceberg=True` configures a hadoop catalog instead.
+Arrow batching, sane shuffle partitioning).
 """
 
 from __future__ import annotations
@@ -46,8 +43,6 @@ def get_spark(
     app_name: str = "tcmkg",
     cores: int | str | None = None,
     shuffle_partitions: int | None = None,
-    iceberg: bool = False,
-    warehouse: str | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
@@ -90,13 +85,6 @@ def get_spark(
         # tmpfs-local shuffle.
         b = b.config("spark.shuffle.compress", "false")
         b = b.config("spark.shuffle.spill.compress", "false")
-    if iceberg:
-        wh = warehouse or "/tmp/tcmkg_warehouse"
-        b = (
-            b.config("spark.sql.catalog.local", "org.apache.iceberg.spark.SparkCatalog")
-            .config("spark.sql.catalog.local.type", "hadoop")
-            .config("spark.sql.catalog.local.warehouse", wh)
-        )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()

@@ -237,8 +237,9 @@ def mention_sink(pipe, out_dir: str):
     `out_dir`. Replaying an epoch (crash between write and checkpoint
     commit) replaces its own directory by rename — idempotent, so
     downstream reads see each epoch exactly once. Readers
-    `spark.read.parquet(out_dir)` get an `epoch` partition column for free
-    (lineage: which micro-batch produced which partials)."""
+    `CheckpointStore(out_dir).read_committed(spark, "epoch")` get the
+    committed epochs with an `epoch` column for free (lineage: which
+    micro-batch produced which partials)."""
     store = CheckpointStore(out_dir)
 
     def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
@@ -359,13 +360,13 @@ def stream_near_dedup(
             bandings = {(m["n_bands"], m["rows_per_band"]) for m in prior.values()}
             if bandings != {(n_bands, rows_per_band)}:
                 raise ValueError(f"signature index banding {bandings} != ({n_bands}, {rows_per_band})")
-            in_prior = F.col("epoch").isin(list(prior))
-            seen = spark.read.parquet(docs.root).filter(in_prior).drop("epoch")
+            in_prior = F.col("epoch").isin([str(e) for e in prior])
+            seen = docs.read_committed(spark, "epoch").filter(in_prior).drop("epoch")
             res = near_dedup_incremental(
                 seen, batch, id_col, text_col,
                 n_bands=n_bands, rows_per_band=rows_per_band,
                 max_bucket=max_bucket, threshold=threshold,
-                seen_sigs=spark.read.parquet(sigs.root).filter(in_prior).drop("epoch"),
+                seen_sigs=sigs.read_committed(spark, "epoch").filter(in_prior).drop("epoch"),
                 seen_banding=(n_bands, rows_per_band),
             )
             kept = res["kept_new"]

@@ -213,25 +213,147 @@ def test_gaz_fingerprint_covers_vocabularies(monkeypatch, gazetteers):
 
 
 def test_checkpoint_layout(tmp_path, spark, pipeline, transcripts_df):
-    """run() writes few files: s1_mentions is not partitioned by kind and
-    holds at most 2 x defaultParallelism data files; each s2_triples
-    predicate directory holds exactly one."""
+    """run() writes few files: neither s1_mentions nor s2_triples is
+    partitioned (by kind, by pred), and each holds at most
+    2 x defaultParallelism data files."""
     import os
 
     ckpt = str(tmp_path / "layout")
     pipeline.run(transcripts_df, checkpoint_dir=ckpt)
 
-    def data_files(d):
-        return [f for f in os.listdir(d) if f.startswith("part-")]
+    for stage, col in (("s1_mentions", "kind="), ("s2_triples", "pred=")):
+        d = os.path.join(ckpt, stage)
+        assert not [e for e in os.listdir(d) if e.startswith(col)], stage
+        n = len([f for f in os.listdir(d) if f.startswith("part-")])
+        assert 1 <= n <= 2 * spark.sparkContext.defaultParallelism, (stage, n)
 
-    s1 = os.path.join(ckpt, "s1_mentions")
-    assert not [d for d in os.listdir(s1) if d.startswith("kind=")]
-    assert 1 <= len(data_files(s1)) <= 2 * spark.sparkContext.defaultParallelism
-    s2 = os.path.join(ckpt, "s2_triples")
-    preds = [d for d in os.listdir(s2) if d.startswith("pred=")]
-    assert preds
-    for d in preds:
-        assert len(data_files(os.path.join(s2, d))) == 1, d
+
+def _jobs_in(spark, group, fn):
+    """(fn(), number of Spark jobs fn ran) by a job-group census."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_stage_reads_run_no_jobs(tmp_path, spark, pipeline, transcripts_df):
+    """A stage read takes its schema from the manifest entry: reading any
+    of run()'s four stages runs no Spark job, and the schema equals what
+    parquet inference reports — partition columns included, for a stage
+    written partitioned."""
+    import os
+    import uuid
+
+    from tcmkg.pipeline.checkpoints import CheckpointStore
+
+    ckpt = str(tmp_path / "reads")
+    out = pipeline.run(transcripts_df, checkpoint_dir=ckpt)
+    store = CheckpointStore(ckpt)
+    store.write(out["metrics"], "by_metric", partition_by=["metric"])
+    for stage in ("s1_mentions", "s2_triples", "s3_nodes", "s4_metrics", "by_metric"):
+        assert "schema" in store.manifest[stage]
+        schema, jobs = _jobs_in(
+            spark, f"stage-read-{uuid.uuid4().hex}", lambda: store.read(spark, stage).schema
+        )
+        assert jobs == 0, stage
+        assert schema == spark.read.parquet(os.path.join(ckpt, stage)).schema, stage
+    assert store.read(spark, "by_metric").columns[-1] == "metric"
+
+
+def test_checkpoint_parent_layout_resumes(tmp_path, spark, pipeline, transcripts_df):
+    """A checkpoint in the previous layout — s2_triples partitioned by
+    pred, manifest entries without a schema — resumes without recomputing
+    and gives the same triples and weights as a fresh run."""
+    import json
+    import os
+
+    from tcmkg.pipeline.checkpoints import CheckpointStore
+    from tcmkg.pipeline.triples import assemble_triples
+
+    def triples(out):
+        return sorted(
+            (r["subj"], r["pred"], r["obj"], None if r["weight"] is None else round(r["weight"], 9))
+            for r in out["triples"].collect()
+        )
+
+    want = triples(pipeline.run(transcripts_df, checkpoint_dir=str(tmp_path / "new")))
+
+    old = str(tmp_path / "old")
+    store = CheckpointStore(old)
+    mentions = pipeline.mentions(transcripts_df)
+    store.write(mentions, "s1_mentions")
+    store.write(assemble_triples(store.read(spark, "s1_mentions")), "s2_triples",
+                partition_by=["pred"])
+    store.write(pipeline.nodes_table(), "s3_nodes")
+    store.write(
+        pipeline._metrics(store.read(spark, "s1_mentions"), store.read(spark, "s2_triples")),
+        "s4_metrics",
+    )
+    mf = os.path.join(old, "_MANIFEST.json")
+    with open(mf) as f:
+        manifest = json.load(f)
+    for entry in manifest.values():
+        del entry["schema"]
+    with open(mf, "w") as f:
+        json.dump(manifest, f)
+
+    assert triples(pipeline.run(transcripts_df, checkpoint_dir=old)) == want
+    # resumed, not recomputed: the pred= layout and the schema-less entries stay
+    assert [d for d in os.listdir(os.path.join(old, "s2_triples")) if d.startswith("pred=")]
+    assert not any("schema" in e for e in CheckpointStore(old).manifest.values())
+
+
+def test_read_committed_skips_unpublished_stage(tmp_path, spark):
+    """read_committed reads only the manifest's `<col>=` stages, `col`
+    typed string: a stage dir renamed into place without a manifest entry
+    (a crash between the rename and the manifest write) is invisible to it,
+    though a whole-root read includes it."""
+    import os
+    import shutil
+
+    from tcmkg.pipeline.checkpoints import CheckpointStore
+
+    root = str(tmp_path / "committed")
+    store = CheckpointStore(root)
+    with pytest.raises(FileNotFoundError):
+        store.read_committed(spark, "epoch")
+    store.write(spark.range(3), "epoch=0")
+    store.write(spark.range(10, 12), "epoch=1")
+    shutil.copytree(os.path.join(root, "epoch=1"), os.path.join(root, "epoch=2"))
+
+    got = store.read_committed(spark, "epoch")
+    assert got.schema["epoch"].dataType.typeName() == "string"
+    assert sorted((r["epoch"], r["id"]) for r in got.collect()) == (
+        [("0", i) for i in range(3)] + [("1", 10), ("1", 11)]
+    )
+    assert spark.read.parquet(root).count() == 7
+
+
+def test_constant_frames_are_local_relations(spark, pipeline, gazetteers, monkeypatch):
+    """Driver-built constant frames are JVM LocalRelations, not LogicalRDDs
+    of pickled rows whose every scan runs Python tasks. Arrow conversion
+    falls back to the pickled path silently, so only this test notices:
+    formula_alias, a _canon_frames record frame, the _union_nodes dims
+    frame and the locus surface frame."""
+    from tcmkg.pipeline import locus, runner, util
+
+    made = []
+
+    def spy(*args, local_frame=util.local_frame):
+        made.append(local_frame(*args))
+        return made[-1]
+
+    monkeypatch.setattr(util, "local_frame", spy)
+    monkeypatch.setattr(locus, "local_frame", spy)
+    runner._canon_frames(spark, "herb", gazetteers.tables()["herb"])
+    runner._union_nodes(spark, [pipeline.nodes_table()])
+    locus.symptom_locus_edges(pipeline.nodes_table())
+    assert len(made) == 3
+    for df in [pipeline.formula_alias] + made:
+        assert df._jdf.queryExecution().optimizedPlan().nodeName() == "LocalRelation"
 
 
 def test_checkpoint_manifest_merges_stores(tmp_path, spark):
