@@ -276,9 +276,9 @@ class KGPipeline:
         spark = self.spark
         # No stage is partitioned: reduce_mentions and _metrics read every
         # kind in one scan, and export_reference_layout and _metrics read
-        # every predicate. A `pred=` layout cost s2 a serial write of one
-        # file per predicate (47) and a 47-task scan on every resume. Stages
-        # written partitioned by kind or pred still resume (partition
+        # every predicate. A `pred=` layout would cost s2 a serial write of
+        # one file per predicate (47) and a 47-task scan on every resume.
+        # Stages written partitioned by kind or pred still resume (partition
         # discovery restores the column).
         mentions = store.run_stage(
             spark, "s1_mentions",
@@ -308,8 +308,8 @@ class KGPipeline:
         is its stage `tranche=<key>` (input files in the entry's `files`),
         published by rename, so a crashed run leaves nothing visible; all
         tranches read back as one scan filtered to the manifest's keys
-        (`CheckpointStore.read_committed`), with `tranche` typed string. Idempotent: calling again with no new
-        files recomputes nothing.
+        (`CheckpointStore.read_committed`), with `tranche` typed string.
+        Idempotent: calling again with no new files recomputes nothing.
 
         Carry-forward contract (same as streaming's foreachBatch path): a
         conversation must arrive whole within one tranche — files WITHIN a
