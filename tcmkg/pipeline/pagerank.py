@@ -72,7 +72,8 @@ def pagerank(
     e = edges.select(*cols).distinct().localCheckpoint()
     wexpr = F.col("w") if weight_col is not None else F.lit(1.0)
     out = e.groupBy("src").agg(F.sum(wexpr).cast("double").alias("deg"))
-    # one up-front shuffle of the O(E) side; the loop never moves it again
+    # the checkpoint drops the src partitioning: each iteration's join
+    # still re-shuffles this O(E) side by src
     contrib_edges = (
         e.join(out, "src").repartition("src").localCheckpoint()
     )

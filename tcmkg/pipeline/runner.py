@@ -20,11 +20,10 @@ import hashlib
 import inspect
 import os
 import sys
-from functools import partial
+from functools import cache
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..fixtures import dimensions as _dimensions
 from ..fixtures import locus as _locus_vocab
@@ -42,14 +41,6 @@ from .extract import MENTION_SCHEMA, extract_mentions, ingest, resolve_anchors, 
 from .locus import symptom_locus_edges
 from .triples import assemble_triples
 
-_GAZ_SCHEMA = T.StructType(
-    [
-        T.StructField("record_id", T.StringType()),
-        T.StructField("names", T.StringType()),
-        T.StructField("symmap_id", T.StringType()),
-        T.StructField("extdb_id", T.StringType()),
-    ]
-)
 
 # default on-disk home for the canonicalized-gazetteer stage tables (repo
 # data dir; gitignored). Keyed by a content+code fingerprint, so a changed
@@ -89,40 +80,22 @@ def _tranche_key(files: list[str]) -> str:
     return hashlib.md5("\n".join(files).encode()).hexdigest()[:16]
 
 
-def _canon_frames(spark: SparkSession, etype: str, records):
-    """-> (alias2canon thunk, folded node-table thunk) for one entity type;
-    both share one canonicalization, computed at most once."""
-    rec_df = _util.local_frame(spark, records_to_rows(records), _GAZ_SCHEMA)
-    canon_cache: dict[str, DataFrame] = {}
-
-    def _canon() -> dict[str, DataFrame]:
-        if not canon_cache:
-            rec2canon, alias2canon = canonicalize(rec_df, CANON_PREFIX[etype])
-            canon_cache.update(rec2canon=rec2canon, alias2canon=alias2canon)
-        return canon_cache
-
-    def _nodes_df() -> DataFrame:
-        # fold merged records into one canonical row with the reference's
-        # merge_two_value semantics (set-union of `;`-tokens per column —
-        # merge_utility.py:120-156) via the A1/A2 aggregation builders
-        return (
-            rec_df.join(_canon()["rec2canon"], "record_id")
-            .groupBy("canonical_id")
-            .agg(
-                fold_multivalue("names"),
-                fold_multivalue("symmap_id"),
-                fold_multivalue("extdb_id"),
-                F.array_sort(F.collect_set("record_id")).alias("source_records"),
-            )
-            .withColumn("names", F.split("names", ";"))
-            .withColumn("entity_type", F.lit(etype))
-        )
-
-    return (lambda: _canon()["alias2canon"]), _nodes_df
+def _gaz_records(spark: SparkSession, gaz: Gazetteers) -> DataFrame:
+    """Every gazetteer record of every entity type as one frame, each row
+    tagged with its type and the type's canonical-id prefix."""
+    rows = [
+        dict(row, prefix=CANON_PREFIX[etype], entity_type=etype)
+        for etype, records in gaz.tables().items()
+        for row in records_to_rows(records)
+    ]
+    return _util.local_frame(
+        spark, rows, "prefix string, entity_type string, record_id string, names string, "
+        "symmap_id string, extdb_id string",
+    )
 
 
-def _union_nodes(spark: SparkSession, per_type: list[DataFrame]) -> DataFrame:
-    """The full node table: the folded per-type tables plus the dimension
+def _union_nodes(spark: SparkSession, folded: DataFrame) -> DataFrame:
+    """The full node table: the folded gazetteer nodes plus the dimension
     entities (property/flavour/tropism/toxicity) and locus entities — for
     those the fixed vocabulary IS the entity table (reference
     extract_herb.py:466-585 + merge_tcm_symptom.py:92-98 write them as
@@ -133,10 +106,7 @@ def _union_nodes(spark: SparkSession, per_type: list[DataFrame]) -> DataFrame:
         "canonical_id string, entity_type string, names array<string>, "
         "symmap_id string, extdb_id string, source_records array<string>",
     )
-    out = per_type[0]
-    for n in per_type[1:] + [dims]:
-        out = out.unionByName(n)
-    return out.select(
+    return folded.unionByName(dims).select(
         "canonical_id",
         "entity_type",
         "names",
@@ -149,16 +119,14 @@ def _union_nodes(spark: SparkSession, per_type: list[DataFrame]) -> DataFrame:
 class KGPipeline:
     """Holds canonicalized gazetteers; `run` builds triples for a corpus.
 
-    Gazetteer canonicalization (9 entity types x CC + ranking) is the only
-    expensive fixed cost per fresh session. With `canon_dir` (default: the
-    repo data dir) every corpus-independent table persists as a
-    CheckpointStore stage keyed by the gazetteer+code fingerprint:
-    `alias_<type>` (alias map per entity type), `nodes_<type>` (folded
-    per-type nodes, only an input of the next stage), `nodes_all` (the
-    full node table, dimension and locus entities included) and
-    `symptom_locus` (the symptom→locus edges). A warm session reads the
-    alias maps and the two full tables and nothing else. Pass
-    canon_dir=None to recompute lazily in memory.
+    Gazetteer canonicalization (one CC + ranking over all nine entity
+    types, keys and record ids namespaced by type) is the only expensive
+    fixed cost per fresh session. Under `canon_dir` (default: the repo
+    data dir) every corpus-independent table persists as a CheckpointStore
+    stage keyed by the gazetteer+code fingerprint: `alias` (every type's
+    alias map, by prefix), `nodes_all` (the full node table, dimension and
+    locus entities included) and `symptom_locus` (the symptom→locus
+    edges). A warm session reads the three and collects the alias maps.
 
     `run` checkpoints its four stages unpartitioned: every reader of
     `s1_mentions` and `s2_triples` (the triple assembly, `_metrics`, the
@@ -173,43 +141,50 @@ class KGPipeline:
         self,
         spark: SparkSession,
         gaz: Gazetteers | None = None,
-        canon_dir: str | None = _DEFAULT_CANON_DIR,
+        canon_dir: str = _DEFAULT_CANON_DIR,
     ) -> None:
         self.spark = spark
         KGPipeline._instances += 1
         self._cache_key = f"pipeline{KGPipeline._instances}"
         gaz = gaz or build_gazetteers()
-        store = None
-        if canon_dir is not None:
-            store = CheckpointStore(os.path.join(canon_dir, _gaz_fingerprint(gaz)))
-        self.maps: dict[str, dict[str, str]] = {}
-        per_type = []
-        for etype, records in gaz.tables().items():
-            alias_df, nodes_df = _canon_frames(spark, etype, records)
-            if store is None:
-                alias2canon = alias_df()
-                per_type.append(nodes_df)
-            else:
-                alias2canon = store.run_stage(spark, f"alias_{etype}", alias_df)
-                per_type.append(partial(store.run_stage, spark, f"nodes_{etype}", nodes_df))
-            rows = [(r["alias"], r["canonical_id"]) for r in alias2canon.collect()]
-            self.maps[etype] = normalize_alias_map(rows)
+        store = CheckpointStore(os.path.join(canon_dir, _gaz_fingerprint(gaz)))
+        records = _gaz_records(spark, gaz)
+        # the two stages below share one canonicalization, run at most once
+        canon = cache(lambda: canonicalize(records, F.col("prefix")))
+
+        def _nodes_all() -> DataFrame:
+            # fold merged records into one canonical row (canonical ids
+            # are unique across types) with the reference's merge_two_value
+            # semantics (set-union of `;`-tokens per column —
+            # merge_utility.py:120-156) via the A1/A2 aggregation builders
+            folded = (
+                records.join(canon()[0], ["prefix", "record_id"])
+                .groupBy("canonical_id", "entity_type")
+                .agg(
+                    fold_multivalue("names"),
+                    fold_multivalue("symmap_id"),
+                    fold_multivalue("extdb_id"),
+                    F.array_sort(F.collect_set("record_id")).alias("source_records"),
+                )
+                .withColumn("names", F.split("names", ";"))
+            )
+            return _union_nodes(spark, folded)
+
+        alias = store.run_stage(spark, "alias", lambda: canon()[1]).collect()
+        self.maps: dict[str, dict[str, str]] = {
+            etype: normalize_alias_map(
+                [(r["alias"], r["canonical_id"]) for r in alias if r["prefix"] == prefix]
+            )
+            for etype, prefix in CANON_PREFIX.items()
+        }
         # both broadcast joins of resolve_anchors scan it on every run
         self.formula_alias = _util.local_frame(
             spark, list(self.maps["formula"].items()), "alias string, canonical_id string"
         )
-
-        def _nodes_all() -> DataFrame:
-            return _union_nodes(spark, [f() for f in per_type])
-
-        if store is None:
-            self._nodes = _nodes_all()
-            self._symptom_locus = symptom_locus_edges(self._nodes)
-        else:
-            self._nodes = store.run_stage(spark, "nodes_all", _nodes_all)
-            self._symptom_locus = store.run_stage(
-                spark, "symptom_locus", lambda: symptom_locus_edges(self._nodes)
-            )
+        self._nodes = store.run_stage(spark, "nodes_all", _nodes_all)
+        self._symptom_locus = store.run_stage(
+            spark, "symptom_locus", lambda: symptom_locus_edges(self._nodes)
+        )
 
     # ------------------------------------------------------------------
     def nodes_table(self) -> DataFrame:

@@ -230,12 +230,16 @@ def test_cc_edges_long_chain_block_boundary(spark):
     assert len(got) == n + 1
 
 
-@pytest.mark.parametrize("etype", ["herb", "symptom"])
+@pytest.mark.parametrize("etype", ["herb", "symptom", "all"])
 def test_canonicalize_matches_oracle(spark, etype):
     """canonicalize (hyper-keys reduced to pair edges, then the pair-edge
     CC) gives the oracle union-find's alias map, in fixture record order
-    and in a shuffled one: canonical ids do not depend on input order."""
+    and in a shuffled one: canonical ids do not depend on input order.
+    "all" canonicalizes the nine types in one call, each record tagged
+    with its type's prefix; each type's map must equal its own oracle's."""
     import random
+
+    from pyspark.sql import functions as F
 
     from tcmkg.fixtures.gazetteers import (
         CANON_PREFIX, build_gazetteers, records_to_rows,
@@ -243,15 +247,59 @@ def test_canonicalize_matches_oracle(spark, etype):
     from tcmkg.oracle.extractor import canonicalize_records
     from tcmkg.pipeline.canonicalize import canonicalize, normalize_alias_map
 
-    records = build_gazetteers().tables()[etype]
-    shuffled = list(records)
+    tables = build_gazetteers().tables()
+    etypes = list(tables) if etype == "all" else [etype]
+    rows = [
+        dict(row, prefix=CANON_PREFIX[t]) for t in etypes for row in records_to_rows(tables[t])
+    ]
+    shuffled = list(rows)
     random.Random(7).shuffle(shuffled)
-    schema = "record_id string, names string, symmap_id string, extdb_id string"
-    want = canonicalize_records(records, CANON_PREFIX[etype])[1]
-    for order in (records, shuffled):
-        rec_df = spark.createDataFrame(records_to_rows(order), schema)
-        _, alias2canon = canonicalize(rec_df, CANON_PREFIX[etype])
-        got = normalize_alias_map(
-            [(r["alias"], r["canonical_id"]) for r in alias2canon.collect()]
-        )
-        assert got == want
+    schema = "prefix string, record_id string, names string, symmap_id string, extdb_id string"
+    prefix = F.col("prefix") if etype == "all" else CANON_PREFIX[etype]
+    for order in (rows, shuffled):
+        rec_df = spark.createDataFrame(order, schema)
+        _, alias2canon = canonicalize(rec_df, prefix)
+        pairs = {CANON_PREFIX[t]: [] for t in etypes}
+        for r in alias2canon.collect():
+            pairs[r["prefix"]].append((r["alias"], r["canonical_id"]))
+        for t in etypes:
+            want = canonicalize_records(tables[t], CANON_PREFIX[t])[1]
+            assert normalize_alias_map(pairs[CANON_PREFIX[t]]) == want, t
+
+
+def test_canonicalize_keeps_types_apart(spark):
+    """Two types whose records share a name, a symmap id, an extdb id and a
+    record id, canonicalized in one call: nothing links the types. Each
+    keeps its own components, numbered from its own prefix's 00000."""
+    from pyspark.sql import functions as F
+
+    from tcmkg.pipeline.canonicalize import canonicalize
+
+    rows = [
+        ("TMHB", "R1", "甘草;国老", "SM1", "DB1"),
+        ("TMHB", "R2", "国老", "", ""),
+        ("TMHB", "R3", "人参", "", ""),
+        ("TMTS", "R1", "甘草", "SM1", "DB1"),
+        ("TMTS", "R0", "头痛", "", "DB1"),
+        ("TMTS", "R4", "人参", "SM1", ""),
+    ]
+    rec_df = spark.createDataFrame(
+        rows, "prefix string, record_id string, names string, symmap_id string, extdb_id string"
+    )
+    rec2canon, alias2canon = canonicalize(rec_df, F.col("prefix"))
+    assert {(r["prefix"], r["record_id"]): r["canonical_id"] for r in rec2canon.collect()} == {
+        ("TMHB", "R1"): "TMHB00000",
+        ("TMHB", "R2"): "TMHB00000",
+        ("TMHB", "R3"): "TMHB00001",
+        ("TMTS", "R0"): "TMTS00000",
+        ("TMTS", "R1"): "TMTS00000",
+        ("TMTS", "R4"): "TMTS00000",
+    }
+    assert {(r["prefix"], r["alias"]): r["canonical_id"] for r in alias2canon.collect()} == {
+        ("TMHB", "甘草"): "TMHB00000",
+        ("TMHB", "国老"): "TMHB00000",
+        ("TMHB", "人参"): "TMHB00001",
+        ("TMTS", "甘草"): "TMTS00000",
+        ("TMTS", "头痛"): "TMTS00000",
+        ("TMTS", "人参"): "TMTS00000",
+    }

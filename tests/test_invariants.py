@@ -165,22 +165,30 @@ def test_checkpoint_recovers_from_torn_write(tmp_path, spark, pipeline, transcri
 
 
 def test_gazetteer_canon_checkpoint(tmp_path, spark, gazetteers):
-    """Second-session construction resumes from the canon stage tables: the
-    manifest is hit for every entity type and the resumed pipeline's alias
-    maps and node tables equal the computing run's."""
+    """Second-session construction resumes from the canon stage tables: one
+    `alias` stage for every entity type, `nodes_all` and `symptom_locus`,
+    and no per-type stage. A cold construction (one canonicalization over
+    all types) runs at most 62 Spark jobs, a warm one at most 2, and the
+    resumed pipeline's alias maps and node tables equal the computing
+    run's."""
     import os
 
     from tcmkg.pipeline.checkpoints import CheckpointStore
     from tcmkg.pipeline.runner import KGPipeline, _gaz_fingerprint
 
     d = str(tmp_path / "canon")
-    p1 = KGPipeline(spark, gazetteers, canon_dir=d)  # computes + writes
+    p1, jobs = _jobs_in(  # computes + writes
+        spark, "canon-cold", lambda: KGPipeline(spark, gazetteers, canon_dir=d)
+    )
+    assert jobs <= 62, jobs
     store = CheckpointStore(os.path.join(d, _gaz_fingerprint(gazetteers)))
-    etypes = ("herb", "formula", "symptom", "syndrome", "disease")
-    assert all(store.has(f"{k}_{e}") for k in ("alias", "nodes") for e in etypes)
-    assert store.has("nodes_all") and store.has("symptom_locus")
+    stages = ["alias", "nodes_all", "symptom_locus"]
+    assert sorted(store.manifest) == stages and all(map(store.has, stages))
 
-    p2 = KGPipeline(spark, gazetteers, canon_dir=d)  # resumes
+    p2, jobs = _jobs_in(  # resumes
+        spark, "canon-warm", lambda: KGPipeline(spark, gazetteers, canon_dir=d)
+    )
+    assert jobs <= 2, jobs
     assert p2.maps == p1.maps
     n1 = {tuple(sorted(r["names"])) + (r["canonical_id"], r["entity_type"])
           for r in p1.nodes_table().collect()}
@@ -336,8 +344,8 @@ def test_constant_frames_are_local_relations(spark, pipeline, gazetteers, monkey
     """Driver-built constant frames are JVM LocalRelations, not LogicalRDDs
     of pickled rows whose every scan runs Python tasks. Arrow conversion
     falls back to the pickled path silently, so only this test notices:
-    formula_alias, a _canon_frames record frame, the _union_nodes dims
-    frame and the locus surface frame."""
+    formula_alias, the all-types gazetteer records frame, the _union_nodes
+    dims frame and the locus surface frame."""
     from tcmkg.pipeline import locus, runner, util
 
     made = []
@@ -348,8 +356,8 @@ def test_constant_frames_are_local_relations(spark, pipeline, gazetteers, monkey
 
     monkeypatch.setattr(util, "local_frame", spy)
     monkeypatch.setattr(locus, "local_frame", spy)
-    runner._canon_frames(spark, "herb", gazetteers.tables()["herb"])
-    runner._union_nodes(spark, [pipeline.nodes_table()])
+    runner._gaz_records(spark, gazetteers)
+    runner._union_nodes(spark, pipeline.nodes_table())
     locus.symptom_locus_edges(pipeline.nodes_table())
     assert len(made) == 3
     for df in [pipeline.formula_alias] + made:

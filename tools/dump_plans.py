@@ -220,9 +220,10 @@ def main() -> None:
             "pagerank single iteration body (r5)",
             "The O(E) contribution side was joined to its out-degree, "
             "hash-repartitioned by src and localCheckpointed BEFORE the "
-            "loop (it appears below as a bare checkpoint scan, no exchange "
-            "of its own); each iteration shuffles only the O(V) rank frame "
-            "to meet it plus one map-side-combinable SUM groupBy dst — the "
+            "loop. The checkpoint scan reports no partitioning, so each "
+            "iteration re-shuffles it by src (the Exchange "
+            "hashpartitioning(src) over its scan below) to meet the O(V) "
+            "rank frame, plus one map-side-combinable SUM groupBy dst — the "
             "hub-in-degree argument from pipeline/cc.py. Lineage is "
             "truncated every _CHECKPOINT_PERIOD iterations so the plan depth "
             "is O(1) in the iteration count.",
