@@ -42,6 +42,28 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
+def _plan_width(plan) -> int:
+    """Partitions a physical plan runs as, read off the plan without
+    running it: the count the node declares (an exchange, a coalesce, a
+    range); else a union's inputs summed, any other node's widest input (a
+    broadcast side declares 1), and a leaf's own split count (a file scan's
+    file splits, as the scan computes them at run time)."""
+    name = plan.nodeName()
+    if name == "AdaptiveSparkPlan":
+        return _plan_width(plan.executedPlan())
+    if name == "InMemoryTableScan":  # building the cache's RDD would run its plan
+        return _plan_width(plan.relation().cachedPlan())
+    n = plan.outputPartitioning().numPartitions()
+    if n > 0:
+        return n
+    kids = plan.children()
+    if kids.isEmpty():
+        rdd = plan.executeColumnar() if plan.supportsColumnar() else plan.execute()
+        return rdd.getNumPartitions()
+    widths = [_plan_width(kids.apply(i)) for i in range(kids.size())]
+    return sum(widths) if name == "Union" else max(widths)
+
+
 def _respread_by(df: DataFrame, key: str) -> DataFrame:
     """Hash-repartition onto the cluster when the source would run
     narrower than the core count — a single-file/single-row-group parquet
@@ -53,11 +75,16 @@ def _respread_by(df: DataFrame, key: str) -> DataFrame:
     many-file inputs arrive pre-split, and an unconditional pre-shuffle
     of raw text would be a regression (the post-aggregation shuffle rows
     are much smaller than the text). Results are unaffected — every
-    consumer aggregates with order-free functions (min/count)."""
+    consumer aggregates with order-free functions (min/count).
+
+    The width comes from the physical plan (`_plan_width`), so deciding
+    runs no job: materializing the input's RDD would run the stages
+    upstream of any exchange under AQE. An input behind an exchange counts
+    as its shuffle width, before AQE coalescing."""
     spark = df.sparkSession
     par = spark.sparkContext.defaultParallelism
     try:
-        n = df.rdd.getNumPartitions()
+        n = _plan_width(df._jdf.queryExecution().executedPlan())
     except Exception:
         return df
     return df.repartition(par, F.col(key)) if n < par else df

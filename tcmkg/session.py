@@ -2,7 +2,8 @@
 
 Local mode stands in for a multi-executor cluster; every knob here is the
 one we would also set on a real 1000-executor deployment (AQE, skew join,
-Arrow batching, sane shuffle partitioning).
+Arrow batching, sane shuffle partitioning, a generated-class cache that
+holds the engine's working set, JVM case mapping).
 """
 
 from __future__ import annotations
@@ -39,6 +40,17 @@ def default_driver_memory() -> str:
     return f"{min(24 * 1024, phys // 2**21)}m"
 
 
+# Entries in Spark's generated-class cache (`spark.sql.codegen.cache.maxEntries`,
+# a static conf; Spark's default is 100). Census of CodegenMetrics
+# compilations at local[4]: five `near_dedup` ops over 1,000 documents compile
+# 226-252 distinct classes, a perfbench `near_dedup` run ~265 and a
+# `KGPipeline.run` build ~117. At 100 entries each warm `near_dedup` op plus
+# its follow-up evicted and recompiled 169-187 classes, 1.6-1.9 s of Janino
+# time in a 4.4-5.4 s op; at 1000 it compiles 6-36, and a second build in one
+# process 0-4 instead of 42-78. The bound caps the compiled classes kept alive.
+CODEGEN_CACHE_ENTRIES = 1000
+
+
 def get_spark(
     app_name: str = "tcmkg",
     cores: int | str | None = None,
@@ -72,6 +84,14 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("TCMKG_DRIVER_MEM", default_driver_memory()))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # lower/upper on the JVM's own case mapping, not ICU's: the first
+        # ICU `lower` in a JVM loads its tables for 1.4-1.8 s (0.2 s on the
+        # JVM path), and that call is ingest's `text_norm_col`. The two
+        # differ on 67 code points, all Unicode-version skew; none occurs in
+        # the fixtures, and Python's `str.lower` (the oracle) matches neither
+        # everywhere.
+        .config("spark.sql.icu.caseMappings.enabled", "false")
     )
     # RAM-backed shuffle dirs: on this single box the overlay-fs /tmp makes
     # shuffle I/O a serial bottleneck that masks CPU scaling; a real cluster

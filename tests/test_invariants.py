@@ -575,3 +575,82 @@ def test_assembly_drops_null_pair_keys(spark):
     }
     want = rows(assemble_triples(frame(clean)))
     assert want and rows(assemble_triples(frame(clean + nulls))) == want
+
+
+def test_repeated_near_dedup_reuses_generated_code(spark, transcripts_pdf):
+    """The session's generated-class cache holds near_dedup's working set:
+    a second identical call finds its classes cached. At Spark's default of
+    100 entries the second call recompiled most of them (108 of 131)."""
+    import re
+
+    from tcmkg import session
+    from tcmkg.ops.dedup import near_dedup
+
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
+        session.CODEGEN_CACHE_ENTRIES
+    )
+    texts = sorted(set(transcripts_pdf["text"]))[:1000]
+    docs = spark.createDataFrame(
+        [(i, " ".join(c for c in re.split(r"[，。、：；！？,.;:]", t) if c))
+         for i, t in enumerate(texts)],
+        "doc_id long, text string",
+    )
+    metric = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def call():
+        before = metric.getCount()
+        res = near_dedup(docs, "doc_id", "text", threshold=0.5)
+        try:
+            removals = sorted(res["removals"].collect())
+        finally:
+            res["unpersist"]()
+        return removals, metric.getCount() - before
+
+    first, compiled_first = call()
+    second, compiled_second = call()
+    assert first == second and first
+    assert compiled_second <= max(20, compiled_first // 4), (compiled_first, compiled_second)
+
+
+def test_text_norm_col_matches_python_lower(spark, transcripts_pdf, gazetteers):
+    """text_norm_col (JVM case mapping, ICU off) equals the oracle's
+    text_norm on every distinct character of the fixture transcripts and
+    gazetteer names, and on strings whose case mapping is special."""
+    from tcmkg.kernels.normalize import text_norm, text_norm_col
+
+    assert spark.conf.get("spark.sql.icu.caseMappings.enabled") == "false"
+    chars = set("".join(transcripts_pdf["text"]))
+    for records in gazetteers.tables().values():
+        chars.update("".join(n for r in records for n in r.names))
+    probes = sorted(chars) + ["ΑΣ", "İstanbul", "ẞ", "ǅ", "TNF-α", "麻黄汤ABC"]
+    df = spark.createDataFrame([(s,) for s in probes], "s string")
+    got = dict(df.select("s", text_norm_col(F.col("s")).alias("n")).collect())
+    assert len(got) == len(probes)
+    assert {s: n for s, n in got.items() if n != text_norm(s)} == {}
+
+
+def test_respread_width_runs_no_jobs(tmp_path, spark):
+    """_respread_by reads the input's width off the physical plan: deciding
+    runs no Spark job for a scan, a groupBy or a join input, and a scan
+    gets the decision the materialized width would give (a single-file
+    scan respreads, a scan at least core-wide does not)."""
+    import uuid
+
+    from tcmkg.ops.dedup import _respread_by
+
+    par = spark.sparkContext.defaultParallelism
+    rows = spark.range(4000).selectExpr("id", "cast(id % 97 as string) AS t")
+    rows.coalesce(1).write.parquet(str(tmp_path / "one"))
+    rows.repartition(2 * par).write.parquet(str(tmp_path / "wide"))
+    one = lambda: spark.read.parquet(str(tmp_path / "one"))
+    wide = lambda: spark.read.parquet(str(tmp_path / "wide"))
+
+    def respread(df):
+        out, jobs = _jobs_in(spark, f"respread-{uuid.uuid4().hex}", lambda: _respread_by(df, "id"))
+        assert jobs == 0
+        return out is not df
+
+    assert one().rdd.getNumPartitions() == 1 and respread(one())
+    assert wide().rdd.getNumPartitions() >= par and not respread(wide())
+    assert not respread(one().groupBy("t").agg(F.min("id").alias("id")))
+    assert not respread(one().join(wide().withColumnRenamed("t", "u"), "id"))
